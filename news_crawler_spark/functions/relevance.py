@@ -193,7 +193,7 @@ def relevance_profile_loop_factory(include: list[str], exclude: list[str]):
 def relevance_profile_fast_factory(include: list[str], exclude: list[str]):
     r"""EXACT vectorized relevance for News_keyword.json-scale configs —
     the crawl's large-config path (auto-selected by run_crawl past
-    ``relevance_udf_threshold`` keywords).
+    ``plans.crawl.RELEVANCE_UDF_THRESHOLD`` keywords).
 
     Round-3 rework (round-2 VERDICT: the Arrow batch was walked with a
     per-row Python loop): the batch is processed as ONE mega-string per

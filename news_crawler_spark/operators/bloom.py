@@ -25,7 +25,7 @@ dependence).
 from __future__ import annotations
 
 import hashlib
-import weakref
+import threading
 
 import numpy as np
 import pandas as pd
@@ -162,39 +162,45 @@ def probe(candidates: DataFrame, shards: DataFrame, url_col: str = "url_canon",
 
 BROADCAST_SHARD_BYTES = 64 << 20  # ≤64 MiB of filter → ship in the UDF closure
 
-# Weak registry of the sc.broadcast handles minted by probe_broadcast
-# (bloom AND cuckoo arms). Weakrefs only: one-shot callers (q16, tests)
-# keep the normal lifecycle — handle dies with its plan, ContextCleaner
-# reclaims it after a JVM GC. The crawl loop, whose windows mint one
-# broadcast each, drains the registry per window and destroys the
-# previous window's entries deterministically once wait_commit + the
-# checkpoint materialization invariants guarantee no live plan can
-# re-evaluate them — instead of letting shard bytes for up to 8 windows
-# accrete between the loop's periodic GCs.
+# Registry of the sc.broadcast handles minted by probe_broadcast (here
+# and in operators/cuckoo.py). It holds STRONG references: the only other
+# reference lives inside the pickled UDF closure, so a weakref would be
+# dead on return and nothing could be destroyed. The crawl loop drains
+# the registry per window and destroys the previous window's handles
+# once wait_commit and the checkpoint materialization invariants
+# guarantee no live plan can re-evaluate them — instead of letting shard
+# bytes accrete until the loop's periodic GCs. One-shot callers (q16,
+# tests) never drain, so the registry keeps only the newest
+# MAX_TRACKED_BROADCASTS handles; older ones fall back to the normal
+# ContextCleaner lifecycle instead of staying pinned for the session.
+MAX_TRACKED_BROADCASTS = 8
 _LIVE_PROBE_BROADCASTS: list = []
+_REGISTRY_LOCK = threading.Lock()
 
 
-def _track_broadcast(bc) -> None:
-    _LIVE_PROBE_BROADCASTS.append(weakref.ref(bc))
+def track_broadcast(bc) -> None:
+    """Register a probe broadcast for the next drain (bounded, see above)."""
+    with _REGISTRY_LOCK:
+        _LIVE_PROBE_BROADCASTS.append(bc)
+        del _LIVE_PROBE_BROADCASTS[:-MAX_TRACKED_BROADCASTS]
 
 
 def drain_probe_broadcasts() -> list:
-    """Hand the tracked broadcast weakrefs to the caller and reset the
-    registry. The caller owns deciding when destroy_broadcasts is safe."""
-    out = _LIVE_PROBE_BROADCASTS[:]
-    _LIVE_PROBE_BROADCASTS.clear()
+    """Hand the tracked broadcast handles to the caller and reset the
+    registry (one atomic swap: a handle tracked from another thread lands
+    either in the returned list or in the fresh one, never in neither).
+    The caller owns deciding when destroy_broadcasts is safe."""
+    global _LIVE_PROBE_BROADCASTS
+    with _REGISTRY_LOCK:
+        out, _LIVE_PROBE_BROADCASTS = _LIVE_PROBE_BROADCASTS, []
     return out
 
 
-def destroy_broadcasts(refs: list) -> None:
-    """Destroy still-live broadcast handles (frees executor blocks AND
-    the driver copy now, not at the next periodic GC). Dead refs mean the
-    ContextCleaner already has the handle; errors mean the context is
-    shutting down — both are fine to skip."""
-    for ref in refs:
-        bc = ref()
-        if bc is None:
-            continue
+def destroy_broadcasts(handles: list) -> None:
+    """Destroy broadcast handles (frees executor blocks AND the driver
+    copy now, not at the next periodic GC). Errors mean the handle is
+    already destroyed or the context is shutting down — fine to skip."""
+    for bc in handles:
         try:
             bc.destroy()
         except Exception:
@@ -224,7 +230,7 @@ def probe_broadcast(candidates: DataFrame, shard_rows: list, n_shards: int,
         "n_bits": int(shard_rows[0]["n_bits"]),
         "k": int(shard_rows[0]["n_hashes"]),
     })
-    _track_broadcast(bc)
+    track_broadcast(bc)
 
     @pandas_udf("boolean")
     def bloom_maybe_seen(urls: pd.Series) -> pd.Series:
@@ -267,15 +273,6 @@ def merge_rows(prev_rows: list | None, delta_rows: list) -> list:
         by[sid] = dict(by[sid], bits=(a | b).tobytes(),
                        version=max(int(by[sid]["version"]), int(r["version"])))
     return [by[k] for k in sorted(by)]
-
-
-def rows_df(spark, rows: list):
-    """Driver shard rows → DataFrame (for the snapshot commit)."""
-    return spark.createDataFrame(
-        [(int(r["shard_id"]), int(r["n_bits"]), int(r["n_hashes"]),
-          bytes(r["bits"]), int(r["version"])) for r in rows],
-        BLOOM_SCHEMA,
-    )
 
 
 def dedup_new_rows(candidates: DataFrame, seen: DataFrame, shard_rows: list,

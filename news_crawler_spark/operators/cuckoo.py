@@ -1,19 +1,21 @@
-"""Sharded cuckoo-filter URL-seen prefilter — the 'cuckoo' arm of the
-north rule's "Bloom/cuckoo" (operators/bloom.py is the Bloom arm; both
-share the routing contract: a negative is DEFINITELY new, a positive
-routes to the exact anti-join).
+"""Sharded cuckoo filter over a URL set — a standalone operator whose
+reason to exist is DELETION, which Bloom bits cannot support.
 
-Why a cuckoo variant exists: unlike Bloom bits, cuckoo fingerprints
-support DELETION — the state a re-crawl policy needs when URLs leave
-the seen-set (expired documents re-fetched). Standard partial-key
-cuckoo hashing: 4-slot buckets, fingerprint fp ∈ [1, 2^16), candidate
-buckets i1 = h mod B and i2 = i1 XOR (fp·0x5bd1e995) mod B (XOR makes
-the pair computable from either side — eviction needs no key).
+A seen-set with expiry (re-crawl policies that let documents leave the
+set and be fetched again) needs to remove entries; the crawl's own seen
+set only grows, so its prefilter is the Bloom filter in
+operators/bloom.py and this module is not on the crawl path. The probe
+contract is the same: a negative is DEFINITELY absent, a positive must
+be confirmed against the exact set.
+
+Standard partial-key cuckoo hashing: 4-slot buckets, fingerprint
+fp ∈ [1, 2^16), candidate buckets i1 = h mod B and
+i2 = i1 XOR (fp·0x5bd1e995) mod B (XOR makes the pair computable from
+either side — eviction needs no key).
 
 Same shard layout as bloom: shard_id = h1(url) % n_shards, build via
-applyInPandas per shard, probe via broadcast closure (small) — the
-cogrouped path would mirror bloom.probe for filters past the broadcast
-cap.
+applyInPandas per shard, probe via a broadcast pandas UDF, delete via a
+cogrouped applyInPandas.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bloom import _h12, _track_broadcast, shard_id_col
+from .bloom import _h12, shard_id_col, track_broadcast
 
 SLOTS = 4
 MIX = np.uint64(0x5BD1E995)
@@ -91,7 +93,7 @@ def probe_broadcast(candidates: DataFrame, shard_rows: list, n_shards: int,
         "tables": {int(r["shard_id"]): bytes(r["table"]) for r in shard_rows},
         "n_buckets": int(shard_rows[0]["n_buckets"]),
     })
-    _track_broadcast(bc)
+    track_broadcast(bc)
 
     @pandas_udf("boolean")
     def cuckoo_maybe_seen(urls: pd.Series) -> pd.Series:
@@ -136,130 +138,6 @@ def _insert_into_table(table: np.ndarray, fp: np.ndarray, i1: np.ndarray,
             raise RuntimeError(f"cuckoo shard {sid} overflow — resize")
         inserted += 1
     return inserted
-
-
-def insert_urls(shards: DataFrame, urls: DataFrame, n_shards: int = 32,
-                buckets_per_shard: int = 1 << 14) -> DataFrame:
-    """Incremental insert (the per-window seen-delta update). Shards with
-    no prior row are created fresh at ``buckets_per_shard``."""
-
-    def apply_inserts(key, shard_pdf: pd.DataFrame, ins_pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(key[0])
-        if shard_pdf.empty:
-            table = np.zeros((buckets_per_shard, SLOTS), dtype=np.uint16)
-            nb = np.uint64(buckets_per_shard)
-            version, n_items = 0, 0
-        else:
-            row = shard_pdf.iloc[0]
-            table = np.frombuffer(row["table"], dtype=np.uint16).reshape(-1, SLOTS).copy()
-            nb = np.uint64(int(row["n_buckets"]))
-            version, n_items = int(row["version"]), int(row["n_items"])
-        if not ins_pdf.empty:
-            fp, h1 = _fingerprints(ins_pdf["url_canon"])
-            i1 = (h1 // np.uint64(n_shards)) % nb
-            n_items += _insert_into_table(table, fp, i1, nb, sid)
-        return pd.DataFrame(
-            [[sid, int(nb), table.tobytes(), version + 1, n_items]],
-            columns=["shard_id", "n_buckets", "table", "version", "n_items"],
-        )
-
-    routed = urls.withColumn("shard_id", shard_id_col(F.col("url_canon"), n_shards))
-    return (
-        shards.groupBy("shard_id")
-        .cogroup(routed.groupBy("shard_id"))
-        .applyInPandas(apply_inserts, schema=CUCKOO_SCHEMA)
-    )
-
-
-FPS_SCHEMA = "shard_id int, fps binary, h1s binary"
-
-
-def delta_fps(urls: DataFrame, n_shards: int = 32) -> DataFrame:
-    """Per-shard (fingerprint, h1) arrays for a seen-delta — the compact
-    payload the driver collects to update its held shard tables (one
-    small job per window; ~10 bytes/URL)."""
-
-    def make(pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(pdf["shard_id"].iloc[0])
-        fp, h1 = _fingerprints(pdf["url_canon"])
-        return pd.DataFrame([[sid, fp.tobytes(), h1.tobytes()]],
-                            columns=["shard_id", "fps", "h1s"])
-
-    routed = urls.withColumn("shard_id", shard_id_col(F.col("url_canon"), n_shards))
-    return routed.groupBy("shard_id").applyInPandas(make, schema=FPS_SCHEMA)
-
-
-def fps_rows_from_urls(urls, n_shards: int = 32) -> list[dict]:
-    """Driver-side twin of ``delta_fps(...).collect()`` (same fingerprint
-    math and h1 % n_shards routing) — lets the crawl loop fold the
-    cuckoo update into its accept-stats collect, no extra Spark job."""
-    import pandas as pd
-
-    urls = pd.Series(urls)
-    fp, h1 = _fingerprints(urls)
-    sid = (h1 % np.uint64(n_shards)).astype(np.int64)
-    rows = []
-    for s in np.unique(sid):
-        m = sid == s
-        rows.append({"shard_id": int(s), "fps": fp[m].tobytes(),
-                     "h1s": h1[m].tobytes()})
-    return rows
-
-
-def insert_rows(prev_rows: list | None, fps_rows: list, n_shards: int = 32,
-                buckets_per_shard: int = 1 << 14) -> list:
-    """Driver-side incremental insert into held shard rows (dicts) — the
-    cuckoo twin of bloom.merge_rows."""
-    by = {int(r["shard_id"]): dict(r) for r in (prev_rows or [])}
-    for r in fps_rows:
-        sid = int(r["shard_id"])
-        entry = by.get(sid)
-        if entry is None:
-            table = np.zeros((buckets_per_shard, SLOTS), dtype=np.uint16)
-            nb = np.uint64(buckets_per_shard)
-            version, n_items = 0, 0
-        else:
-            table = np.frombuffer(entry["table"], dtype=np.uint16).reshape(-1, SLOTS).copy()
-            nb = np.uint64(int(entry["n_buckets"]))
-            version, n_items = int(entry["version"]), int(entry["n_items"])
-        fp = np.frombuffer(r["fps"], dtype=np.uint64)
-        h1 = np.frombuffer(r["h1s"], dtype=np.uint64)
-        i1 = (h1 // np.uint64(n_shards)) % nb
-        n_items += _insert_into_table(table, fp, i1, nb, sid)
-        by[sid] = {"shard_id": sid, "n_buckets": int(nb), "table": table.tobytes(),
-                   "version": version + 1, "n_items": n_items}
-    return [by[k] for k in sorted(by)]
-
-
-def rows_df(spark, rows: list):
-    return spark.createDataFrame(
-        [(int(r["shard_id"]), int(r["n_buckets"]), bytes(r["table"]),
-          int(r["version"]), int(r["n_items"])) for r in rows],
-        CUCKOO_SCHEMA,
-    )
-
-
-def dedup_new_rows(candidates: DataFrame, seen: DataFrame, shard_rows: list,
-                   url_col: str = "url_canon", n_shards: int = 32) -> DataFrame:
-    """dedup_new for driver-held shard rows (no per-window collect job)."""
-    if not shard_rows:
-        return candidates.join(seen, on=url_col, how="left_anti")
-    flagged = probe_broadcast(candidates, shard_rows, n_shards, url_col)
-    definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return definite_new.unionByName(maybe.join(seen, on=url_col, how="left_anti"))
-
-
-def dedup_new(candidates: DataFrame, seen: DataFrame, shards: DataFrame | None,
-              url_col: str = "url_canon", n_shards: int = 32) -> DataFrame:
-    """D1 with the cuckoo arm: same routing contract as bloom.dedup_new —
-    negatives skip the exact anti-join, positives take it."""
-    if shards is None:
-        return candidates.join(seen, on=url_col, how="left_anti")
-    flagged = probe_broadcast(candidates, shards.collect(), n_shards, url_col)
-    definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return definite_new.unionByName(maybe.join(seen, on=url_col, how="left_anti"))
 
 
 def delete_urls(shards: DataFrame, urls: DataFrame, n_shards: int = 32) -> DataFrame:

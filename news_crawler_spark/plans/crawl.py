@@ -34,19 +34,19 @@ Driver-loop scale shape (round-2 rework of the round-1 scale-killers):
   same job, never recomputing the robots join) and the accept-row job,
   which for small windows also carries the head-list scalars (the top-50
   is then merged driver-side and committed via pyarrow — no per-window
-  head Spark job) and the bloom/cuckoo delta twins. Round 1 had five
+  head Spark job) and the Bloom-filter delta twin. Round 1 had five
   collects; empty windows additionally elide their zero-row appends.
 * The snapshot commit is ASYNC: window N+1's DAG builds and runs while
   window N's tables write; the manifest swap stays strictly ordered
   (one in-flight commit; the loop waits before submitting the next).
   Cross-window state is threaded in memory — seen set and fuzzy titles
-  as persisted DataFrames, Bloom/cuckoo shards as driver-held rows
+  as persisted DataFrames, Bloom shards as driver-held rows
   (bounded by the small-filter broadcast cap; deltas collected per
   window, merged in numpy) — so no window blocks on reading back what
   the previous one wrote. A crash loses only uncommitted windows;
   resume replays them deterministically from the last manifest.
 * Host-count dimensions (robots, profiles) broadcast only below
-  ``dim_broadcast_max`` rows; past that they shuffle-join (a 10^7-host
+  ``DIM_BROADCAST_MAX`` rows; past that they shuffle-join (a 10^7-host
   robots table cannot broadcast). The per-site semantic profile map the
   driver needs (crawl delays, stop flags) comes from the 10 base
   profiles in config — never a ``collect()`` of per-host rows.
@@ -77,7 +77,6 @@ page_kind partition column.
 from __future__ import annotations
 
 import hashlib
-import os
 import time
 from collections import Counter, defaultdict
 
@@ -96,7 +95,7 @@ from ..functions.relevance import (
 )
 from ..functions.timeparse import batch_ts_lit, freshness_filter_expr, parse_time_expr
 from ..functions.urls import canonicalize_expr
-from ..operators import bloom, cuckoo
+from ..operators import bloom
 from ..operators.fuzzy import fuzzy_gate
 from ..operators.parse import parse_article, parse_listing
 from ..operators.scheduler import (
@@ -124,6 +123,18 @@ METRICS_SCHEMA = (
     "batch_id int, stage string, partition_id int, rows_in long, rows_out long, wall_ms long"
 )
 STATS_SCHEMA = "tag string, a int, b int, c long, s string"
+
+# Size caps. Each strategy choice below compares a size the loop already
+# observes against one of these; they are module constants, not
+# parameters, because no caller needs another value.
+DIM_BROADCAST_MAX = 4096           # host/site dimension rows that still broadcast
+FETCH_BROADCAST_MAX = 4_000_000    # due rows whose dispatch side still broadcasts
+SEEN_BUCKETS = 64                  # bucket-count ceiling of the compacted seen table
+DRIVER_STATS_MAX_ROWS = 500_000    # window items up to which stats2 is one fused collect
+DRIVER_HEAD_MAX_ROWS = 50_000      # window items up to which the head list stays driver-side
+RELEVANCE_UDF_THRESHOLD = 64       # keyword counts above this take the Arrow-UDF relevance path
+RETRY_BACKOFF_WINDOWS = 1          # windows a failed fetch waits before it is retried
+N_BLOOM_SHARDS = bloom.DEFAULT_N_SHARDS
 
 
 @dataclass
@@ -167,25 +178,16 @@ def run_crawl(
     store: SnapshotStore,
     batch_ts: str = BATCH_TS,
     use_bloom: bool = True,
-    seen_filter: str | None = None,   # 'bloom' | 'cuckoo' | 'none'; None → from use_bloom
-    n_bloom_shards: int = bloom.DEFAULT_N_SHARDS,
     n_salts: int = 4,
     pages_per_batch: int = 1,
     max_batches: int = 10_000,
     fail_after_batch: int | None = None,
     include_keywords: list[str] | None = None,
     exclude_keywords: list[str] | None = None,
-    dim_broadcast_max: int = 4096,
-    fetch_broadcast_max: int = 4_000_000,
     max_retries: int = 0,
-    retry_backoff_windows: int = 1,
-    relevance_udf_threshold: int = 64,
     robots_from_corpus: bool = False,
     compact_every: int | None = None,
-    seen_buckets: int = 64,
     cache_corpus: bool = False,
-    driver_stats_max_rows: int = 500_000,
-    driver_head_max_rows: int = 50_000,
 ) -> CrawlResult:
     """Run the crawl to frontier exhaustion (or ``max_batches`` windows),
     committing one snapshot per window; resumes from the store's last
@@ -235,8 +237,6 @@ def run_crawl(
     inc_arr, exc_arr = keyword_arrays(include_keywords, exclude_keywords)
     bts = batch_ts_lit(batch_ts)
     K = pages_per_batch
-    if seen_filter is None:
-        seen_filter = "bloom" if use_bloom else "none"
     res = CrawlResult()
     _t_prelude = time.time()
     _had_snapshot = store.last_batch_id >= 0  # resume: append tables exist
@@ -258,9 +258,20 @@ def run_crawl(
         if retry_mem is not None:
             retry_mem = retry_mem.filter(F.col("seed_index") >= 0).persist()
         seen_mem = store.read(spark, "seen")
-        shard_tab = {"bloom": "bloom_shards", "cuckoo": "cuckoo_shards"}.get(seen_filter)
-        shards_df = store.read(spark, shard_tab) if shard_tab else None
-        shard_rows = [r.asDict() for r in shards_df.collect()] if shards_df is not None else None
+        shard_rows = None
+        if use_bloom and seen_mem is not None:
+            # A Bloom negative skips the exact anti-join, so the filter
+            # must cover every committed seen URL. The commit meta names
+            # the last batch the committed filter covers; a store whose
+            # last window ran without the filter (or never had one) gets
+            # it rebuilt from seen, once.
+            man = store.manifest()
+            if man.get("meta", {}).get("bloom_through") == man["batch_id"]:
+                shards_df = store.read(spark, "bloom_shards")
+            else:
+                shards_df = bloom.build_shards(seen_mem, n_shards=N_BLOOM_SHARDS,
+                                               version=man["batch_id"])
+            shard_rows = [r.asDict() for r in shards_df.collect()]
     else:
         # no init snapshot: a crash before the first window's commit
         # re-initializes from the world's seed list — same state
@@ -284,7 +295,7 @@ def run_crawl(
     prof_map = {site: profile_of(site) for site in world_sites}
     profiles = profiles_df(spark, world_sites)
     n_dim_rows = len(world_sites)
-    if n_dim_rows <= dim_broadcast_max:
+    if n_dim_rows <= DIM_BROADCAST_MAX:
         # Localize the broadcast-sized robots dim: the distributed parse
         # (or scan) runs exactly ONCE here; per-window broadcasts of a
         # driver-local relation then rebuild the hash relation without
@@ -300,7 +311,7 @@ def run_crawl(
     def _dim(df: DataFrame) -> DataFrame:
         """Host/site-count dimensions broadcast only while they are small;
         at web scale they shuffle-join (round-1 scale-killer #2)."""
-        return F.broadcast(df) if n_dim_rows <= dim_broadcast_max else df
+        return F.broadcast(df) if n_dim_rows <= DIM_BROADCAST_MAX else df
 
     # politeness window must admit every due page of the window's hosts:
     # a host's due count per window page is its seed count (derived from
@@ -329,7 +340,7 @@ def run_crawl(
     # relevance path: native HOFs carry small configs (JVM, codegen);
     # past the threshold the EXACT vectorized Arrow UDF wins (~2.5× at
     # News_keyword.json scale, tools/relevance_bench.py)
-    if len(include_keywords) + len(exclude_keywords) > relevance_udf_threshold:
+    if len(include_keywords) + len(exclude_keywords) > RELEVANCE_UDF_THRESHOLD:
         rel_fast = relevance_profile_fast_factory(include_keywords, exclude_keywords)
         rel_ok = rel_fast(match_text, F.col("relevance_variant"), F.col("use_exclude"),
                           F.col("min_include"))
@@ -403,13 +414,11 @@ def run_crawl(
     # 6.8 s/window with AQE vs 11.2 s static — 32-task stages over a
     # few hundred rows). Threshold: the window's due-page upper bound
     # must cover the shuffle width with real work. Scoped to the loop,
-    # restored after; NCS_LOOP_AQE overrides either way.
+    # restored after.
     _initial_due = sum(1 for s in seed_state if s["active"]) * K
     _static_plan = _initial_due >= 16 * n_parts
     _aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set(
-        "spark.sql.adaptive.enabled",
-        os.environ.get("NCS_LOOP_AQE", "false" if _static_plan else _aqe_prev))
+    spark.conf.set("spark.sql.adaptive.enabled", "false" if _static_plan else _aqe_prev)
     try:
         while batch < max_batches:
             _t_win = time.time()
@@ -460,7 +469,7 @@ def run_crawl(
                     # 64-bucket layout costs 64 scheduled scan tasks per
                     # window at K=1 regardless of bytes, while a 10^10-row
                     # table wants the full configured width
-                    n_b = max(8, min(seen_buckets,
+                    n_b = max(8, min(SEEN_BUCKETS,
                                      seen_rows_total // 250_000 + 8))
                     compact_seen_bucketed(spark, uncomp, seen_table,
                                           n_buckets=n_b)
@@ -532,7 +541,7 @@ def run_crawl(
             # evaluates the observed node only under a cached/broadcast
             # subtree, so the cache-leg form is the robust one.)
             gated = robots_gate(
-                due, robots, broadcast_robots=n_dim_rows <= dim_broadcast_max
+                due, robots, broadcast_robots=n_dim_rows <= DIM_BROADCAST_MAX
             ).persist()
             dispatched = schedule_gated(gated, bts, window_s, n_salts=n_salts).persist()
             retries_next = None
@@ -548,7 +557,7 @@ def run_crawl(
                     fail_rows.filter(F.col("attempt") < max_retries)
                     .withColumn("attempt", F.col("attempt") + 1)
                     .withColumn("retry_after_batch",
-                                F.lit(batch + retry_backoff_windows))
+                                F.lit(batch + RETRY_BACKOFF_WINDOWS))
                 )
                 if held is not None:
                     retries_next = retries_next.unionByName(held)
@@ -562,7 +571,7 @@ def run_crawl(
             # partitions and parsing starts right on top of them.
             n_due_max = len(active) * K
             disp_side = dispatched.select("url_canon", "site", "seed_index", "page")
-            if n_due_max <= fetch_broadcast_max:
+            if n_due_max <= FETCH_BROADCAST_MAX:
                 disp_side = F.broadcast(disp_side)
             # re-spread the MATCHED pages (small) across all cores before
             # the parse UDF — the map-side join leaves them on the scan's
@@ -597,19 +606,16 @@ def run_crawl(
 
             # D1: cross-batch seen — seen rows can neither accept nor claim
             # first-occurrence, so dropping them entirely is exact. The
-            # prefilter arm (bloom or cuckoo) only routes; the anti-join decides.
+            # Bloom prefilter only routes; the anti-join decides.
             # shard state is driver-held rows (bounded by the small-filter
             # broadcast cap): no per-window collect/first jobs, no lazy
             # merge chain whose evaluation grows with window count. Past
             # BROADCAST_SHARD_BYTES the cogrouped bloom.probe path over
             # store-materialized shards is the scale arm.
             if seen_mem is not None:
-                if seen_filter == "cuckoo":
-                    cand = cuckoo.dedup_new_rows(cand, seen_mem, shard_rows or [],
-                                                 n_shards=n_bloom_shards)
-                elif seen_filter == "bloom":
+                if use_bloom:
                     cand = bloom.dedup_new_rows(cand, seen_mem, shard_rows or [],
-                                                n_shards=n_bloom_shards)
+                                                n_shards=N_BLOOM_SHARDS)
                 else:
                     cand = cand.join(seen_mem, on="url_canon", how="left_anti")
 
@@ -620,7 +626,7 @@ def run_crawl(
             # heaviest table) is semi-join-reduced at the SCAN, not
             # shuffled wholesale.
             cand_urls = cand.filter(need_detail).select("url_canon").distinct()
-            if n_due_max * 64 <= fetch_broadcast_max:
+            if n_due_max * 64 <= FETCH_BROADCAST_MAX:
                 cand_urls = F.broadcast(cand_urls)
             detail = parse_article(
                 articles.join(cand_urls, on="url_canon", how="left_semi")
@@ -645,13 +651,6 @@ def run_crawl(
                         "fuzzy_dedup", "d_summary", "d_img", "ts", "row_ok",
                         F.col("href").alias("original_url"))
             )
-            pregate_pre = None
-            if os.environ.get("NCS_PHASE_DEBUG"):
-                pregate._jdf.queryExecution().executedPlan()
-                _clock("pregate_plan", t0)
-                if os.environ.get("NCS_PLAN_DEBUG"):
-                    pregate_pre = pregate
-                t0 = time.time()
             pregate = pregate.localCheckpoint(eager=False)
             _clock("pregate_materialize", t0)
 
@@ -677,10 +676,6 @@ def run_crawl(
             if retries_next is not None:
                 stats1 = stats1.unionByName(_tagged(
                     retries_next.agg(F.count("*").alias("n")), "retry", c=F.col("n")))
-            if os.environ.get("NCS_PHASE_DEBUG"):
-                tp = time.time()
-                stats1._jdf.queryExecution().executedPlan()
-                _clock("stats1_plan", tp)
             stats1 = stats1.toPandas()
             item_counts: dict[tuple[int, int], int] = {}
             soe_rows: list[tuple[int, int, int, str]] = []
@@ -704,9 +699,6 @@ def run_crawl(
                     f"pages in window {batch}; widen window_s or lower K"
                 )
             _clock("stats1", t0)
-            if pregate_pre is not None and batch <= 1:
-                print("PREGATE_FINAL_PLAN\n"
-                      + pregate_pre._jdf.queryExecution().executedPlan().toString())
 
             # ---- driver-side stop replay (exact A6; bounded by window rows)
             t0 = time.time()
@@ -774,10 +766,6 @@ def run_crawl(
                 norm_title_e.alias("norm_title"),
                 F.col("fuzzy_dedup"),
             )
-            if os.environ.get("NCS_PHASE_DEBUG"):
-                tp = time.time()
-                docs._jdf.queryExecution().executedPlan()
-                _clock("docs_plan", tp)
             docs = docs.localCheckpoint(eager=False)
             # LAZY checkpoint: caches like persist() AND truncates the
             # logical plan at creation (no extra job — stats2 below is
@@ -791,21 +779,21 @@ def run_crawl(
             _clock("dag_build", t0)
 
             # ---- stats job 2: accept counts. Window-bounded windows
-            # (items <= driver_stats_max_rows) collect the accepted
+            # (items <= DRIVER_STATS_MAX_ROWS) collect the accepted
             # (seed, page, url) rows instead of pre-aggregated counts:
-            # ONE job then yields accept counts AND the bloom/cuckoo
-            # filter delta (driver-side numpy twins of the shard
-            # builders) — the per-window applyInPandas+collect filter
-            # job disappears. Larger windows keep the aggregate+job path.
+            # ONE job then yields accept counts AND the Bloom filter
+            # delta (driver-side numpy twin of the shard builder) — the
+            # per-window applyInPandas+collect filter job disappears.
+            # Larger windows keep the aggregate+job path.
             t0 = time.time()
             n_items_total = sum(item_counts.values())
-            fuse_stats = n_items_total <= driver_stats_max_rows
+            fuse_stats = n_items_total <= DRIVER_STATS_MAX_ROWS
             # small windows also piggyback the HEAD-LIST scalars on the
             # same collect (title/time/img/summary can be long strings, so
             # the cap is tighter than the count-stats cap): the top-50 is
             # then maintained driver-side and committed as a LocalTable —
             # one fewer Spark job per window
-            fuse_head = fuse_stats and n_items_total <= driver_head_max_rows
+            fuse_head = fuse_stats and n_items_total <= DRIVER_HEAD_MAX_ROWS
             accept_urls = None
             fz_rows = None
             pid_counts = None
@@ -866,13 +854,13 @@ def run_crawl(
             # filter update: collect only the DELTA (one small job on the
             # cached seen_delta), merge/insert driver-side in numpy
             overwrite: dict[str, DataFrame] = {}
-            if seen_filter == "bloom":
+            if use_bloom:
                 if accept_urls is not None:
                     delta_rows = bloom.rows_from_urls(
-                        accept_urls, n_shards=n_bloom_shards, version=batch)
+                        accept_urls, n_shards=N_BLOOM_SHARDS, version=batch)
                 else:
                     delta_rows = [r.asDict() for r in bloom.build_shards(
-                        seen_delta, n_shards=n_bloom_shards, version=batch).collect()]
+                        seen_delta, n_shards=N_BLOOM_SHARDS, version=batch).collect()]
                 shard_rows = bloom.merge_rows(shard_rows, delta_rows)
                 # driver rows → pyarrow commit write: no per-window 1-task
                 # Spark job per state table (the K=1 window floor was job
@@ -881,19 +869,6 @@ def run_crawl(
                     [(int(r["shard_id"]), int(r["n_bits"]), int(r["n_hashes"]),
                       bytes(r["bits"]), int(r["version"])) for r in shard_rows],
                     bloom.BLOOM_SCHEMA)
-            elif seen_filter == "cuckoo":
-                if accept_urls is not None:
-                    fps_rows = cuckoo.fps_rows_from_urls(
-                        accept_urls, n_shards=n_bloom_shards)
-                else:
-                    fps_rows = [r.asDict() for r in cuckoo.delta_fps(
-                        seen_delta, n_shards=n_bloom_shards).collect()]
-                shard_rows = cuckoo.insert_rows(shard_rows, fps_rows,
-                                                n_shards=n_bloom_shards)
-                overwrite["cuckoo_shards"] = LocalTable(
-                    [(int(r["shard_id"]), int(r["n_buckets"]), bytes(r["table"]),
-                      int(r["version"]), int(r["n_items"])) for r in shard_rows],
-                    cuckoo.CUCKOO_SCHEMA)
 
             frontier_rows = [
                 (s["seed_index"], s["site"], s["url"], p1 + 1, s["max_pages"], "pending")
@@ -1078,14 +1053,12 @@ def run_crawl(
                     del append_tables[t]
             if n_disp + n_accepted == 0 and (_had_snapshot or res.dispatched > 0):
                 append_tables.pop("frontier_log", None)
-            store.commit_async(
-                batch,
-                overwrite=overwrite,
-                append=append_tables,
-                meta={"pages": [p0, p1],
-                      "active_seeds": sum(1 for s in seed_state if s["active"]),
-                      "retries_pending": n_retry},
-            )
+            meta = {"pages": [p0, p1],
+                    "active_seeds": sum(1 for s in seed_state if s["active"]),
+                    "retries_pending": n_retry}
+            if use_bloom:
+                meta["bloom_through"] = batch  # bloom_shards covers seen up to here
+            store.commit_async(batch, overwrite=overwrite, append=append_tables, meta=meta)
             _clock("commit_submit", t0)
 
             prev_unpersist = [docs, pregate, items, dispatched, gated, frontier_mem]

@@ -64,7 +64,7 @@ class LocalTable:
 
     The arrow table is built EAGERLY here (pa.array copies) so the async
     commit thread never reads driver state the next window is mutating
-    (seed_state dicts, cuckoo shard buffers).
+    (seed_state dicts, Bloom shard buffers).
     """
 
     def __init__(self, rows: list[tuple], ddl: str):

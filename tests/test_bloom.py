@@ -57,30 +57,90 @@ def test_shard_routing_matches_python_hash(spark):
 
 
 def test_probe_broadcast_registry_lifecycle(spark):
-    # probe_broadcast registers its sc.broadcast handle as a WEAKref:
+    # probe_broadcast registers its sc.broadcast handle (a strong ref):
     # the crawl loop drains the registry per window and destroys the
-    # handles once no live plan can re-evaluate them; one-shot callers
-    # never drain and must keep the normal ContextCleaner lifecycle
-    # (a weakref cannot pin the handle alive).
+    # handles once no live plan can re-evaluate them.
     seen = spark.createDataFrame(_urls("seen", 20), "url_canon string")
     shard_rows = bloom.build_shards(seen, n_shards=4, n_bits=1 << 12).collect()
     cand = spark.createDataFrame(_urls("seen", 20) + _urls("new", 20), "url_canon string")
 
     bloom.drain_probe_broadcasts()  # isolate from earlier tests
     flagged = bloom.probe_broadcast(cand, shard_rows, n_shards=4)
-    refs = bloom.drain_probe_broadcasts()
-    assert len(refs) == 1 and refs[0]() is not None  # live while the plan is
+    handles = bloom.drain_probe_broadcasts()
+    assert len(handles) == 1
+    bc = handles[0]
+    assert bc._jbroadcast.isValid()  # live while the plan is
     assert flagged.filter(F.col("maybe_seen")).count() >= 20
     assert bloom.drain_probe_broadcasts() == []  # drain resets the registry
 
-    # destroy after the plan is released: probing again must mint a fresh
-    # working broadcast (destroyed handles are never reused)
+    # destroy after the plan is released: destroy() must actually run on
+    # the live handle, and probing again mints a fresh working broadcast
     del flagged
-    bloom.destroy_broadcasts(refs)
+    bloom.destroy_broadcasts(handles)
+    assert not bc._jbroadcast.isValid()
     out = {r.url_canon
            for r in bloom.dedup_new_rows(cand, seen, shard_rows, n_shards=4).collect()}
     assert out == {u for (u,) in _urls("new", 20)}
     bloom.destroy_broadcasts(bloom.drain_probe_broadcasts())
+
+
+def test_probe_broadcast_registry_is_capped(spark):
+    # one-shot callers never drain: the registry keeps only the newest
+    # MAX_TRACKED_BROADCASTS handles, so it cannot pin broadcasts forever
+    seen = spark.createDataFrame(_urls("seen", 5), "url_canon string")
+    shard_rows = bloom.build_shards(seen, n_shards=4, n_bits=1 << 12).collect()
+    cand = spark.createDataFrame(_urls("new", 5), "url_canon string")
+
+    bloom.drain_probe_broadcasts()
+    n = bloom.MAX_TRACKED_BROADCASTS + 3
+    for _ in range(n):
+        bloom.probe_broadcast(cand, shard_rows, n_shards=4)
+    handles = bloom.drain_probe_broadcasts()
+    assert len(handles) == bloom.MAX_TRACKED_BROADCASTS
+    assert len({id(h) for h in handles}) == len(handles)
+    bloom.destroy_broadcasts(handles)
+
+
+def test_registry_drain_loses_no_handle_under_concurrency(monkeypatch):
+    # handles tracked from several threads while another thread drains
+    # must each land in exactly one drained list (atomic swap, no lost
+    # append between a copy and a clear)
+    import sys
+    import threading
+
+    monkeypatch.setattr(bloom, "MAX_TRACKED_BROADCASTS", 1 << 20)
+    bloom.drain_probe_broadcasts()
+    n_threads, per_thread = 8, 2000
+    handles = [[object() for _ in range(per_thread)] for _ in range(n_threads)]
+    drained: list = []
+    done = threading.Event()
+
+    def tracker(hs):
+        for h in hs:
+            bloom.track_broadcast(h)
+
+    def drainer():
+        while not done.is_set():
+            drained.extend(bloom.drain_probe_broadcasts())
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        d = threading.Thread(target=drainer)
+        d.start()
+        ts = [threading.Thread(target=tracker, args=(hs,)) for hs in handles]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=60)
+        done.set()
+        d.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not d.is_alive() and not any(t.is_alive() for t in ts)
+    drained.extend(bloom.drain_probe_broadcasts())
+    assert len(drained) == n_threads * per_thread
+    assert {id(h) for h in drained} == {id(h) for hs in handles for h in hs}
 
 
 def test_broadcast_probe_with_empty_shards(spark):

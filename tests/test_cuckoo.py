@@ -1,6 +1,6 @@
-"""Cuckoo-filter URL-seen shards (the 'cuckoo' arm of Bloom/cuckoo):
-no false negatives, low false positives, and — the reason it exists —
-deletion support for re-crawl policies."""
+"""Cuckoo-filter URL shards (a standalone operator, not on the crawl
+path): no false negatives, low false positives, and — the reason it
+exists — deletion support for re-crawl policies."""
 
 from pyspark.sql import functions as F
 
@@ -48,17 +48,3 @@ def test_versions_bump_on_delete(spark):
     upd = cuckoo.delete_urls(shards, spark.createDataFrame(_urls("v", 5), "url_canon string"),
                              n_shards=2)
     assert {r.version for r in upd.collect()} == {8}
-
-
-def test_crawl_parity_with_cuckoo_filter(spark, world, golden, tmp_path):
-    """The cuckoo arm routes the crawl's seen-dedup with exact parity."""
-    from news_crawler_spark.plans.crawl import run_crawl
-    from news_crawler_spark.sources.store import SnapshotStore
-
-    store = SnapshotStore(str(tmp_path / "cuckoo_store"))
-    run_crawl(spark, world, store, seen_filter="cuckoo", n_bloom_shards=8,
-              pages_per_batch=4)
-    rows = store.read(spark, "documents").collect()
-    eng = {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows}
-    assert eng == {k: [tuple(s) for s in v] for k, v in golden.docs.items()}
-    assert store.read(spark, "cuckoo_shards") is not None

@@ -215,20 +215,6 @@ def test_relevance_profile_fast_exact_vs_native(spark):
         assert r.n == r.f, rows[got.index(r)]
 
 
-def test_crawl_udf_relevance_path_parity(spark, world, golden, tmp_path):
-    """Forcing the crawl through the Arrow-UDF relevance path (threshold
-    0) reproduces the same parity result as the native path."""
-    from news_crawler_spark.plans.crawl import run_crawl
-    from news_crawler_spark.sources.store import SnapshotStore
-
-    store = SnapshotStore(str(tmp_path / "udf_rel_store"))
-    run_crawl(spark, world, store, use_bloom=False, pages_per_batch=8,
-              relevance_udf_threshold=0)
-    rows = store.read(spark, "documents").collect()
-    eng = {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows}
-    assert eng == {k: [tuple(s) for s in v] for k, v in golden.docs.items()}
-
-
 def test_relevance_overlapping_keywords(spark):
     """Round-3 ADVICE: partially-overlapping include occurrences (suffix of
     one keyword is a prefix of another — NOT containment) must each count.

@@ -97,3 +97,42 @@ def test_parity_with_virtual_sites(spark, tmp_path):
     assert eng == {k: [tuple(s) for s in v] for k, v in golden2.docs.items()}
     order = [r.url_canon for r in sorted(rows, key=lambda r: r.crawl_order)]
     assert order == golden2.order
+
+
+@pytest.mark.parametrize("stats_cap, head_cap", [(-1, -1), (None, -1)],
+                         ids=["spark-stats-and-head", "spark-head"])
+def test_unfused_stats_and_head_paths_parity(spark, world, golden, tmp_path, monkeypatch,
+                                             stats_cap, head_cap):
+    """The Spark stats2/head-list path that windows past the driver caps
+    take (aggregate stats job, Spark Bloom-delta builder, Spark head
+    merge) keeps parity and maintains the same head list as the batch
+    top-50. Caps of -1 force every window onto that path."""
+    from pyspark.sql import functions as F
+
+    from news_crawler_spark.operators import bloom
+    from news_crawler_spark.operators.archive import head_list
+    from news_crawler_spark.plans import crawl
+
+    if stats_cap is not None:
+        monkeypatch.setattr(crawl, "DRIVER_STATS_MAX_ROWS", stats_cap)
+    monkeypatch.setattr(crawl, "DRIVER_HEAD_MAX_ROWS", head_cap)
+    store = SnapshotStore(str(tmp_path / "unfused"))
+    res = run_crawl(spark, world, store, use_bloom=True, pages_per_batch=2)
+    assert res.batches >= 2  # the second window probes the first one's Spark-built delta
+
+    eng, rows = _engine_docs(spark, store)
+    assert len(rows) == len(eng)
+    assert eng == {k: [tuple(s) for s in v] for k, v in golden.docs.items()}
+    assert [r.url_canon for r in sorted(rows, key=lambda r: r.crawl_order)] == golden.order
+    assert {r.url_canon for r in store.read(spark, "seen").collect()} == golden.seen
+    # the OR of the Spark-built per-window deltas is the filter of the whole seen set
+    want = {r["shard_id"]: r["bits"] for r in bloom.rows_from_urls(sorted(golden.seen))}
+    got = {r.shard_id: bytes(r.bits) for r in store.read(spark, "bloom_shards").collect()}
+    assert got == want
+
+    cols = ["title", "time", "img", "summary", "url", "site", "ts"]
+    docs = store.read(spark, "documents")
+    expect = [tuple(r[c] for c in cols) for r in head_list(docs, k=50).collect()]
+    got = [tuple(r[c] for c in cols) for r in store.read(spark, "head_list")
+           .orderBy(F.desc("ts"), F.col("crawl_order")).collect()]
+    assert got == expect

@@ -5,6 +5,7 @@ per run (daum_scrape.yml:47-56)."""
 
 import pytest
 
+from news_crawler_spark.operators import bloom
 from news_crawler_spark.plans.crawl import InjectedFailure, run_crawl
 from news_crawler_spark.sources.store import SnapshotStore, merge_insert_new
 
@@ -100,3 +101,29 @@ def test_time_travel_append_tables(spark, world, tmp_path):
     assert ss1 is not None
     live = store.read(spark, "seed_state")
     assert ss1.filter("active").count() >= live.filter("active").count()
+
+
+@pytest.mark.parametrize("blooms", [(False, True), (True, False, True)],
+                         ids=["off-on", "on-off-on"])
+def test_resume_rebuilds_bloom_filter_when_setting_changes(spark, world, golden, tmp_path,
+                                                          blooms):
+    """Resuming with the Bloom prefilter on a store whose committed filter
+    does not cover every committed seen URL (an earlier window ran without
+    it) still accepts each document once: a Bloom negative skips the
+    exact anti-join, so the resume must rebuild the filter from seen."""
+    store = SnapshotStore(str(tmp_path / "switch"))
+    for use_bloom in blooms[:-1]:  # one window each
+        run_crawl(spark, world, store, use_bloom=use_bloom, pages_per_batch=1,
+                  max_batches=max(store.last_batch_id, 0) + 1)
+    run_crawl(spark, world, store, use_bloom=blooms[-1], pages_per_batch=1)
+
+    rows = store.read(spark, "documents").collect()
+    assert len(rows) == len({r.doc_id for r in rows})
+    eng = {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows}
+    assert eng == {k: [tuple(s) for s in v] for k, v in golden.docs.items()}
+    assert [r.url_canon for r in sorted(rows, key=lambda r: r.crawl_order)] == golden.order
+    seen = [r.url_canon for r in store.read(spark, "seen").collect()]
+    assert sorted(seen) == sorted(golden.seen)
+    want = {r["shard_id"]: r["bits"] for r in bloom.rows_from_urls(sorted(golden.seen))}
+    got = {r.shard_id: bytes(r.bits) for r in store.read(spark, "bloom_shards").collect()}
+    assert got == want  # the committed filter covers the whole seen set

@@ -76,7 +76,7 @@ def test_retry_gives_up_after_max_attempts(spark, world, tmp_path, target_url):
     store = SnapshotStore(str(tmp_path / "dead_store"))
     broken = _broken(world, target_url)
     run_crawl(spark, broken, store, use_bloom=False, pages_per_batch=2,
-              max_retries=2, retry_backoff_windows=1)
+              max_retries=2)
     log = store.read(spark, "frontier_log").filter(F.col("url_canon") == target_url)
     attempts = sorted(r.attempt for r in log.collect())
     assert attempts == [0, 1, 2]  # original + 2 retries

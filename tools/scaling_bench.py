@@ -251,8 +251,8 @@ def render_md() -> None:
         "  stages; the crawl's widths are sized explicitly, so runtime",
         "  re-planning bought nothing and idled the pool between waves:",
         "  8-core wall 94.6 → 82.4 s, same accepted set (util 0.74 → 0.80);",
-        "  2-core arm unchanged. `NCS_LOOP_AQE=true` restores AQE; results",
-        "  are identical either way (asserted). Small windows keep AQE for",
+        "  2-core arm unchanged. Results were identical either way (asserted",
+        "  with an AQE environment toggle since removed). Small windows keep AQE for",
         "  its partition coalescing.",
         "- **Serial per-window floor is the live lever.** Because the hi arm",
         "  is ~3× shorter, every second of serial driver work (job",
