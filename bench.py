@@ -234,33 +234,6 @@ def main() -> None:
         },
     }
 
-    # ---- frontier hot path (the per-executor shape at 10^10 URLs) -------
-    # Measured BEFORE the crawl arms (round-3 VERDICT: running it after
-    # the 33-window multiwindow arm polluted the JVM — checkpoint blocks,
-    # broadcasts, forced GCs — and the reading regressed 9.2→16.1 s with
-    # byte-unchanged code). Min of 3 per the CLAUDE.md host-noise protocol.
-    from tools.frontier_throughput import messy_urls
-
-    from news_crawler_spark.functions.relevance import keyword_arrays, relevance_expr
-    from news_crawler_spark.functions.urls import canonicalize_expr
-    from news_crawler_spark.config import EXCLUDE_KEYWORDS, INCLUDE_KEYWORDS
-    from pyspark.sql import functions as F
-
-    n_hot = int(os.environ.get("BENCH_HOTPATH_URLS", "2000000"))
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
-    inc_arr, exc_arr = keyword_arrays(INCLUDE_KEYWORDS, EXCLUDE_KEYWORDS)
-    hot = (
-        messy_urls(spark, n_hot, cores)
-        .withColumn("url_canon",
-                    canonicalize_expr(F.col("href"), F.col("origin"), F.lit(False)))
-        .filter(F.col("url_canon").isNotNull())
-        .filter(relevance_expr(F.col("title"), F.lit("substring"), F.lit(True),
-                               inc_arr, exc_arr, F.lit(1)))
-        .dropDuplicates(["url_canon"])
-    )
-    hot_wall = min(_timed_count(hot) for _ in range(3))
-    timings["frontier_hotpath"] = round(hot_wall, 3)
-
     # ---- crawl throughput ------------------------------------------------
     # world on parquet (columnar scans + page_kind partition pruning) —
     # the deployment shape; a driver-held corpus would re-ship per scan
@@ -340,11 +313,6 @@ def main() -> None:
         "sf": sf,
         "crawl": crawl,
         "crawl_multiwindow": crawl_multi,
-        "hotpath": {
-            "n_urls": n_hot,
-            "wall_s": round(hot_wall, 2),
-            "urls_per_sec": round(n_hot / hot_wall, 0),
-        },
         "ann": ann_block,
         "scaling": _scaling_from_artifact(),
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "all"),

@@ -4,18 +4,21 @@ The reference holds every seen URL in an in-memory Python set
 (Nate_Crawler.py:44, seeded from disk at Naver_Crawler.py:58-64) — a
 non-starter at 10^10 URLs. Here the seen-set is (a) an exact ``seen``
 table (parity authority) and (b) a sharded Bloom filter persisted as a
-``bloom_shards`` table, used only to *route*: candidates whose probe is
-negative are definitely unseen and skip the exact anti-join; positives
-go through the exact ``left_anti`` join (Bloom false positives therefore
-cost a join lookup, never a wrong answer — SURVEY §7.3 "Bloom ∧
-exactness").
+``bloom_shards`` table, used only to *route*. Each candidate is probed
+once and meets ONE exact ``left_anti`` join: a probe positive joins on
+its URL, a probe negative on its URL behind a NUL byte that no canonical
+URL starts with, so it can never match yet still spreads over the hash
+partitions like the URLs do (Bloom false positives therefore cost a join
+lookup, never a wrong answer — SURVEY §7.3 "Bloom ∧ exactness"). A null
+URL probes negative and is kept, exactly as the plain anti-join keeps it.
 
-Scale design: shard_id = h1(url) % n_shards. Probing is a **cogrouped
-applyInPandas** on shard_id, so candidate partitions meet only their own
-shard's bits — no broadcast of the full filter (at 10^10 URLs the filter
-is ~12 GB; one shard is a few MB). Shard count is the knob that bounds
-per-task memory. Updates are idempotent OR-merges of per-batch delta
-shards.
+Scale design: shard_id = h1(url) % n_shards. Small filters ship to the
+probe as one broadcast bitset (the shards concatenated in shard order);
+past BROADCAST_SHARD_BYTES probing is a **cogrouped applyInPandas** on
+shard_id, so candidate partitions meet only their own shard's bits — no
+broadcast of the full filter (at 10^10 URLs the filter is ~12 GB; one
+shard is a few MB). Shard count is the knob that bounds per-task memory.
+Updates are idempotent OR-merges of per-batch delta shards.
 
 Hashing is md5 double-hashing (h1 + i*h2 mod n_bits) — deterministic
 across Python/JVM boundaries and stable across runs (no PYTHONHASHSEED
@@ -50,6 +53,34 @@ def _h12(urls: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     return arr[:, 0], arr[:, 1] | np.uint64(1)  # odd → full-period stride
 
 
+def _positions(h1: np.ndarray, h2: np.ndarray, n_shards: int, n_bits: int,
+               k: int) -> np.ndarray:
+    """(k, n) bit positions in the bitset of n_shards concatenated
+    n_bits-bit shards: shard h1 % n_shards, in-shard bit
+    (h1 + i*h2) % n_bits for i < k. n_shards=1 addresses one shard."""
+    i = np.arange(k, dtype=np.uint64)[:, None]
+    n_bits = np.uint64(n_bits)
+    return (h1 % np.uint64(n_shards)) * n_bits + (h1 + i * h2) % n_bits
+
+
+def _set_bits(bits: np.ndarray, pos: np.ndarray) -> None:
+    pos = pos.ravel()
+    np.bitwise_or.at(bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
+
+
+def _maybe_seen(urls: pd.Series, bits: np.ndarray, n_shards: int, n_bits: int,
+                k: int) -> np.ndarray:
+    """Probe flags against a concatenated bitset; a null URL is never
+    maybe-seen (the anti-join keeps it, as the plain anti-join does)."""
+    ok = urls.notna().to_numpy()
+    h1, h2 = _h12(urls[ok])
+    pos = _positions(h1, h2, n_shards, n_bits, k)
+    hit = np.zeros(len(urls), dtype=bool)
+    hit[ok] = ((bits[(pos >> 3).astype(np.int64)] & (1 << (pos & 7)).astype(np.uint8))
+               != 0).all(axis=0)
+    return hit
+
+
 def shard_id_col(url: F.Column, n_shards: int = DEFAULT_N_SHARDS) -> F.Column:
     """JVM-side shard routing that matches _h12's h1 % n_shards: first 8
     bytes (big-endian) of md5. conv() on 16 hex chars is unsigned 64-bit."""
@@ -70,9 +101,7 @@ def build_shards(
         sid = int(pdf["shard_id"].iloc[0])
         bits = np.zeros(n_bits // 8, dtype=np.uint8)
         h1, h2 = _h12(pdf["url_canon"])
-        for i in range(n_hashes):
-            pos = (h1 + np.uint64(i) * h2) % np.uint64(n_bits)
-            np.bitwise_or.at(bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
+        _set_bits(bits, _positions(h1, h2, 1, n_bits, n_hashes))
         return pd.DataFrame(
             [[sid, n_bits, n_hashes, bits.tobytes(), version]],
             columns=["shard_id", "n_bits", "n_hashes", "bits", "version"],
@@ -94,20 +123,13 @@ def rows_from_urls(
     shard routing (h1 % n_shards == shard_id_col), zero Spark jobs —
     the crawl loop folds the filter update into its accept-stats collect
     instead of running a separate applyInPandas job per window."""
-    urls = pd.Series(urls)
-    h1, h2 = _h12(urls)
-    sid = (h1 % np.uint64(n_shards)).astype(np.int64)
-    rows = []
-    for s in np.unique(sid):
-        m = sid == s
-        bits = np.zeros(n_bits // 8, dtype=np.uint8)
-        for i in range(n_hashes):
-            pos = (h1[m] + np.uint64(i) * h2[m]) % np.uint64(n_bits)
-            np.bitwise_or.at(bits, (pos >> 3).astype(np.int64),
-                             (1 << (pos & 7)).astype(np.uint8))
-        rows.append({"shard_id": int(s), "n_bits": n_bits, "n_hashes": n_hashes,
-                     "bits": bits.tobytes(), "version": version})
-    return rows
+    h1, h2 = _h12(pd.Series(urls))
+    n_bytes = n_bits // 8
+    bits = np.zeros(n_shards * n_bytes, dtype=np.uint8)
+    _set_bits(bits, _positions(h1, h2, n_shards, n_bits, n_hashes))
+    return [{"shard_id": s, "n_bits": n_bits, "n_hashes": n_hashes,
+             "bits": bits[s * n_bytes:(s + 1) * n_bytes].tobytes(), "version": version}
+            for s in map(int, np.unique(h1 % np.uint64(n_shards)))]
 
 
 def merge_shards(existing: DataFrame, delta: DataFrame) -> DataFrame:
@@ -137,30 +159,26 @@ def probe(candidates: DataFrame, shards: DataFrame, url_col: str = "url_canon",
     out_schema = f"{url_col} string, maybe_seen boolean"
 
     def pr(cand: pd.DataFrame, sh: pd.DataFrame) -> pd.DataFrame:
-        if cand.empty:
-            return pd.DataFrame(columns=[url_col, "maybe_seen"])
-        if sh.empty:
+        if sh.empty:  # shard with no committed bits: definitely new
             return pd.DataFrame({url_col: cand[url_col], "maybe_seen": False})
         bits = np.frombuffer(sh["bits"].iloc[0], dtype=np.uint8)
-        n_bits = np.uint64(int(sh["n_bits"].iloc[0]))
-        k = int(sh["n_hashes"].iloc[0])
-        h1, h2 = _h12(cand[url_col])
-        hit = np.ones(len(cand), dtype=bool)
-        for i in range(k):
-            pos = (h1 + np.uint64(i) * h2) % n_bits
-            hit &= (bits[(pos >> 3).astype(np.int64)] & (1 << (pos & 7)).astype(np.uint8)) != 0
+        hit = _maybe_seen(cand[url_col], bits, 1, int(sh["n_bits"].iloc[0]),
+                          int(sh["n_hashes"].iloc[0]))
         return pd.DataFrame({url_col: cand[url_col].values, "maybe_seen": hit})
 
-    routed = candidates.select(url_col).distinct().withColumn(
-        "shard_id", shard_id_col(F.col(url_col), n_shards)
-    )
+    routed = (candidates.select(url_col).distinct().filter(F.col(url_col).isNotNull())
+              .withColumn("shard_id", shard_id_col(F.col(url_col), n_shards)))
     flags = routed.groupBy("shard_id").cogroup(shards.groupBy("shard_id")).applyInPandas(
         pr, schema=out_schema
     )
-    return candidates.join(flags, on=url_col, how="left").fillna({"maybe_seen": True})
+    # a URL without a flag row is maybe-seen (the exact join decides); a
+    # null URL is not, as in the broadcast probe
+    return candidates.join(flags, on=url_col, how="left").select(
+        *candidates.columns,
+        F.coalesce("maybe_seen", F.col(url_col).isNotNull()).alias("maybe_seen"))
 
 
-BROADCAST_SHARD_BYTES = 64 << 20  # ≤64 MiB of filter → ship in the UDF closure
+BROADCAST_SHARD_BYTES = 64 << 20  # ≤64 MiB of filter → ship as a probe broadcast
 
 # Registry of the sc.broadcast handles minted by probe_broadcast (here
 # and in operators/cuckoo.py). It holds STRONG references: the only other
@@ -218,40 +236,26 @@ def probe_broadcast(candidates: DataFrame, shard_rows: list, n_shards: int,
     and is cached by the python workers across tasks. The cogrouped
     ``probe`` is the big-filter path; same bit semantics. ``n_shards`` is
     the CONFIGURED shard count (routing modulus) — the committed rows may
-    cover fewer shards (empty shards are absent)."""
+    cover fewer shards; an absent shard ships as zero bytes, so every URL
+    routed to it is definitely new."""
     from pyspark.sql.functions import pandas_udf
 
+    n_bits, k = int(shard_rows[0]["n_bits"]), int(shard_rows[0]["n_hashes"])
+    n_bytes = n_bits // 8
+    bits = np.zeros(n_shards * n_bytes, dtype=np.uint8)
+    for r in shard_rows:
+        s = int(r["shard_id"])
+        bits[s * n_bytes:(s + 1) * n_bytes] = np.frombuffer(r["bits"], dtype=np.uint8)
     # resolve the context from the DataFrame itself: getActiveSession()
     # returns None off the main thread (e.g. a plan built from the async
     # commit thread) — the argument already carries its session
-    sc = candidates.sparkSession.sparkContext
-    bc = sc.broadcast({
-        "bits": {int(r["shard_id"]): bytes(r["bits"]) for r in shard_rows},
-        "n_bits": int(shard_rows[0]["n_bits"]),
-        "k": int(shard_rows[0]["n_hashes"]),
-    })
+    bc = candidates.sparkSession.sparkContext.broadcast(bits.tobytes())
     track_broadcast(bc)
 
     @pandas_udf("boolean")
     def bloom_maybe_seen(urls: pd.Series) -> pd.Series:
-        v = bc.value
-        shard_bits = {s: np.frombuffer(b, dtype=np.uint8)
-                      for s, b in v["bits"].items()}
-        n_bits = np.uint64(v["n_bits"])
-        k = v["k"]
-        h1, h2 = _h12(urls)
-        sid = h1 % np.uint64(n_shards)
-        # urls routed to a shard with no committed bits are definitely new
-        hit = np.isin(sid, np.array(list(shard_bits), dtype=np.uint64))
-        for i in range(k):
-            pos = (h1 + np.uint64(i) * h2) % n_bits
-            byte_i = (pos >> 3).astype(np.int64)
-            mask = (1 << (pos & 7)).astype(np.uint8)
-            for s, bits in shard_bits.items():
-                m = sid == np.uint64(s)
-                if m.any():
-                    hit[m] &= (bits[byte_i[m]] & mask[m]) != 0
-        return pd.Series(hit)
+        return pd.Series(_maybe_seen(urls, np.frombuffer(bc.value, dtype=np.uint8),
+                                     n_shards, n_bits, k))
 
     return candidates.withColumn("maybe_seen", bloom_maybe_seen(F.col(url_col)))
 
@@ -275,28 +279,47 @@ def merge_rows(prev_rows: list | None, delta_rows: list) -> list:
     return [by[k] for k in sorted(by)]
 
 
+# Prefix for the join key of probe negatives: no canonical URL starts
+# with NUL, so a salted key never matches a seen URL.
+_NEW_KEY_SALT = "\u0000"
+
+
+def _anti_join_probed(flagged: DataFrame, seen: DataFrame, url_col: str) -> DataFrame:
+    """One exact left_anti of a probed frame against seen. Probe positives
+    join on their URL; probe negatives on the salted URL, which matches
+    nothing yet hashes like a URL, so under a sort-merge join they spread
+    over the reducers (a null key would send them all to one). Returns
+    the probed frame's columns minus ``maybe_seen``."""
+    key = F.when(F.col("maybe_seen"), F.col(url_col)).otherwise(
+        F.concat(F.lit(_NEW_KEY_SALT), F.col(url_col)))
+    return (flagged.withColumn("_seen_key", key)
+            .join(seen.select(F.col(url_col).alias("_seen_key")), on="_seen_key",
+                  how="left_anti")
+            .drop("_seen_key", "maybe_seen"))
+
+
 def dedup_new_rows(candidates: DataFrame, seen: DataFrame, shard_rows: list,
                    url_col: str = "url_canon",
                    n_shards: int = DEFAULT_N_SHARDS) -> DataFrame:
     """dedup_new for driver-held shard rows (the crawl's small-filter
-    path): no per-window first()/collect() jobs — the probe closure is
-    built directly from the rows."""
+    path): no per-window first()/collect() jobs — the broadcast probe is
+    built directly from the rows, evaluated once per candidate, and its
+    flag routes the candidate inside one anti-join. No rows: plain
+    left_anti."""
     if not shard_rows:
         return candidates.join(seen, on=url_col, how="left_anti")
-    flagged = probe_broadcast(candidates, shard_rows, n_shards, url_col)
-    definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return definite_new.unionByName(maybe.join(seen, on=url_col, how="left_anti"))
+    return _anti_join_probed(probe_broadcast(candidates, shard_rows, n_shards, url_col),
+                             seen, url_col)
 
 
 def dedup_new(candidates: DataFrame, seen: DataFrame, shards: DataFrame | None,
               url_col: str = "url_canon", n_shards: int = DEFAULT_N_SHARDS) -> DataFrame:
     """D1: rows of candidates whose URL is not in seen.
 
-    With shards: bloom-negative rows pass directly (no join); only
-    bloom-positive rows pay the exact anti-join. Small filters ship via
-    the UDF closure (no routing shuffle); big filters use the cogrouped
-    per-shard probe. Without shards: plain left_anti.
+    With shards: each candidate is probed once and meets one exact
+    anti-join, routed by its probe flag (see ``_anti_join_probed``).
+    Small filters ship as a broadcast (no routing shuffle); big filters
+    use the cogrouped per-shard probe. Without shards: plain left_anti.
     """
     if shards is None:
         return candidates.join(seen, on=url_col, how="left_anti")
@@ -308,7 +331,4 @@ def dedup_new(candidates: DataFrame, seen: DataFrame, shards: DataFrame | None,
         flagged = probe_broadcast(candidates, shard_rows, n_shards, url_col)
     else:
         flagged = probe(candidates, shards, url_col, n_shards)
-    definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    checked = maybe.join(seen, on=url_col, how="left_anti")
-    return definite_new.unionByName(checked)
+    return _anti_join_probed(flagged, seen, url_col)

@@ -606,7 +606,10 @@ def run_crawl(
 
             # D1: cross-batch seen — seen rows can neither accept nor claim
             # first-occurrence, so dropping them entirely is exact. The
-            # Bloom prefilter only routes; the anti-join decides.
+            # Bloom prefilter only routes; the anti-join decides. Each
+            # candidate is probed once and meets ONE anti-join, keyed on
+            # its URL if maybe-seen and on a never-matching salted URL if
+            # not (bloom._anti_join_probed).
             # shard state is driver-held rows (bounded by the small-filter
             # broadcast cap): no per-window collect/first jobs, no lazy
             # merge chain whose evaluation grows with window count. Past

@@ -153,3 +153,107 @@ def test_broadcast_probe_with_empty_shards(spark):
     cand = spark.createDataFrame(_urls("seen", 3) + _urls("new", 50), "url_canon string")
     out = {r.url_canon for r in bloom.dedup_new(cand, seen, shards, n_shards=32).collect()}
     assert out == {u for (u,) in _urls("new", 50)}
+
+
+def _reference_bits(urls, n_shards, n_bits, k):
+    """Pure-Python md5 double-hash Bloom: {shard_id: set of bit positions}."""
+    import hashlib
+
+    out = {}
+    for u in urls:
+        d = hashlib.md5(u.encode()).digest()
+        h1, h2 = int.from_bytes(d[:8], "big"), int.from_bytes(d[8:], "big") | 1
+        out.setdefault(h1 % n_shards, set()).update(
+            (h1 + i * h2) % (1 << 64) % n_bits for i in range(k))
+    return out
+
+
+def test_bit_math_matches_python_reference(spark):
+    # the vectorized builders and both probes agree with a per-URL Python
+    # loop; a small filter (~half its bits set) makes false positives occur
+    n_shards, n_bits, k = 8, 1 << 8, bloom.DEFAULT_N_HASHES
+    seen_urls = [u for (u,) in _urls("seen", 200)]
+    ref = _reference_bits(seen_urls, n_shards, n_bits, k)
+
+    def positions(b):
+        return {i for i in range(len(b) * 8) if b[i >> 3] >> (i & 7) & 1}
+
+    rows = bloom.rows_from_urls(seen_urls, n_shards=n_shards, n_bits=n_bits)
+    assert {r["shard_id"]: positions(r["bits"]) for r in rows} == ref
+    shards = bloom.build_shards(spark.createDataFrame(_urls("seen", 200), "url_canon string"),
+                                n_shards=n_shards, n_bits=n_bits)
+    assert {r.shard_id: positions(r.bits) for r in shards.collect()} == ref
+
+    cand_urls = seen_urls + [u for (u,) in _urls("new", 400)]
+    want = {}
+    for u in cand_urls:
+        ((s, pos),) = _reference_bits([u], n_shards, n_bits, k).items()
+        want[u] = pos <= ref.get(s, set())
+    assert 0 < sum(want.values()) - len(seen_urls) < 100  # some false positives
+    cand = spark.createDataFrame([(u,) for u in cand_urls], "url_canon string")
+    for flagged in (bloom.probe_broadcast(cand, rows, n_shards=n_shards),
+                    bloom.probe(cand, shards, n_shards=n_shards)):
+        assert {r.url_canon: r.maybe_seen for r in flagged.collect()} == want
+    bloom.destroy_broadcasts(bloom.drain_probe_broadcasts())
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_null_url_agrees_with_plain_anti_join(spark, monkeypatch):
+    # a null candidate URL probes negative instead of failing the task,
+    # so use_bloom on and off keep the same rows
+    seen = spark.createDataFrame(_urls("seen", 20), "url_canon string")
+    shards = bloom.build_shards(seen, n_shards=4, n_bits=1 << 12)
+    cand = spark.createDataFrame(
+        [(None, 0), ("https://example.com/seen/3", 1), ("https://example.com/new/1", 2)],
+        "url_canon string, x int")
+    want = sorted(cand.join(seen, on="url_canon", how="left_anti").select("x").collect())
+    assert [r.x for r in want] == [0, 2]
+    outs = [bloom.dedup_new_rows(cand, seen, shards.collect(), n_shards=4),
+            bloom.dedup_new(cand, seen, shards, n_shards=4)]  # broadcast arm
+    monkeypatch.setattr(bloom, "BROADCAST_SHARD_BYTES", 0)
+    outs.append(bloom.dedup_new(cand, seen, shards, n_shards=4))  # cogrouped arm
+    for got in outs:
+        assert got.columns == cand.columns
+        assert sorted(got.select("x").collect()) == want
+    # the cogrouped probe flags a null URL as not maybe-seen, too
+    flags = {r.x: r.maybe_seen for r in bloom.probe(cand, shards, n_shards=4).collect()}
+    assert flags == {0: False, 1: True, 2: flags[2]}
+    bloom.destroy_broadcasts(bloom.drain_probe_broadcasts())
+
+
+def test_probe_runs_once_and_new_rows_spread(spark):
+    # one probe evaluation feeding one anti-join, under both join
+    # strategies; under the sort-merge join the probe negatives must not
+    # pile into one reducer (a null join key would send them all there)
+    seen = spark.createDataFrame(_urls("seen", 300), "url_canon string")
+    shard_rows = bloom.build_shards(seen, n_shards=8, n_bits=1 << 14).collect()
+    cand = spark.createDataFrame(
+        [(u, i) for i, (u,) in enumerate(_urls("seen", 300) + _urls("new", 3000))],
+        "url_canon string, x int")
+    old = {k: spark.conf.get(k) for k in ("spark.sql.autoBroadcastJoinThreshold",
+                                          "spark.sql.adaptive.enabled")}
+    try:
+        # static plan: AQE would coalesce the reducers this checks
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        for broadcast in (True, False):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                           old["spark.sql.autoBroadcastJoinThreshold"] if broadcast else "-1")
+            out = bloom.dedup_new_rows(cand, F.broadcast(seen) if broadcast else seen,
+                                       shard_rows, n_shards=8)
+            plan = _plan(out)
+            assert plan.count("ArrowEvalPython") == 1, plan
+            assert out.columns == cand.columns
+            sizes = out.rdd.glom().map(len).collect()
+            assert sum(sizes) == 3000
+            if broadcast:
+                assert "BroadcastHashJoin" in plan
+            else:
+                assert "SortMergeJoin" in plan
+                assert max(sizes) <= 2 * sum(sizes) / len(sizes), sizes
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    bloom.destroy_broadcasts(bloom.drain_probe_broadcasts())
