@@ -237,8 +237,8 @@ def q15_url_canonicalize(spark, sf):
 
 
 def q16_bloom_dedup(spark, sf):
-    """D1 Bloom-routed exact anti-join: result must equal plain anti-join
-    (false positives only route, never decide)."""
+    """D1 seen dedup (operators.bloom.dedup_new): result must equal the
+    plain anti-join."""
     li = _t(spark, sf, "lineitem")
     o = _t(spark, sf, "orders")
     cand = li.select(
@@ -247,10 +247,7 @@ def q16_bloom_dedup(spark, sf):
     seen = o.filter(F.col("o_orderkey") % 2 == 0).select(
         F.concat(F.lit("https://ex.com/i/"), F.col("o_orderkey")).alias("url_canon")
     )
-    # persist: dedup_new inspects shard metadata then collects the bits —
-    # without caching the shard build would run twice
-    shards = bloom.build_shards(seen, n_shards=8, n_bits=1 << 16).persist()
-    return bloom.dedup_new(cand, seen, shards, n_shards=8)
+    return bloom.dedup_new(cand, seen, None)
 
 
 def q17_span_assembly(spark, sf):

@@ -3,18 +3,23 @@
 The reference holds every seen URL in an in-memory Python set
 (Nate_Crawler.py:44, seeded from disk at Naver_Crawler.py:58-64) — a
 non-starter at 10^10 URLs. Here the seen-set is (a) an exact ``seen``
-table (parity authority) and (b) a sharded Bloom filter persisted as a
-``bloom_shards`` table, used only to *route*. Each candidate is probed
-once and meets ONE exact ``left_anti`` join: a probe positive joins on
-its URL, a probe negative on its URL behind a NUL byte that no canonical
-URL starts with, so it can never match yet still spreads over the hash
-partitions like the URLs do (Bloom false positives therefore cost a join
-lookup, never a wrong answer — SURVEY §7.3 "Bloom ∧ exactness"). A null
-URL probes negative and is kept, exactly as the plain anti-join keeps it.
+table, the only authority: ``dedup_new`` and ``dedup_new_rows`` are ONE
+exact ``left_anti`` against it; and (b) a sharded Bloom filter persisted
+as a ``bloom_shards`` table, whose probes (``probe_broadcast``, the
+cogrouped ``probe``) flag each candidate ``maybe_seen`` with no false
+negatives (a null URL is never maybe-seen).
+
+The dedup does not probe the filter. A probe negative saves work only
+if it skips the anti-join, and that takes a second plan arm over the
+probed frame, so Spark evaluates the upstream plan and the pandas-UDF
+probe twice. Routing negatives through the same join on a key that never
+matches probes once but saves no join work. Either way the probe's
+per-task Python hop costs more than the broadcast anti-join it could
+spare (see ROADMAP item 2 for the measurements and what is left).
 
 Scale design: shard_id = h1(url) % n_shards. Small filters ship to the
 probe as one broadcast bitset (the shards concatenated in shard order);
-past BROADCAST_SHARD_BYTES probing is a **cogrouped applyInPandas** on
+a filter too big to broadcast is probed by a **cogrouped applyInPandas** on
 shard_id, so candidate partitions meet only their own shard's bits — no
 broadcast of the full filter (at 10^10 URLs the filter is ~12 GB; one
 shard is a few MB). Shard count is the knob that bounds per-task memory.
@@ -54,31 +59,34 @@ def _h12(urls: pd.Series) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _positions(h1: np.ndarray, h2: np.ndarray, n_shards: int, n_bits: int,
-               k: int) -> np.ndarray:
-    """(k, n) bit positions in the bitset of n_shards concatenated
-    n_bits-bit shards: shard h1 % n_shards, in-shard bit
-    (h1 + i*h2) % n_bits for i < k. n_shards=1 addresses one shard."""
-    i = np.arange(k, dtype=np.uint64)[:, None]
+               k: int):
+    """Yields, for each hash i < k, the n bit positions in the bitset of
+    n_shards concatenated n_bits-bit shards: shard h1 % n_shards, in-shard
+    bit (h1 + i*h2) % n_bits. n_shards=1 addresses one shard. One hash at
+    a time keeps the scratch O(n), whatever k is."""
     n_bits = np.uint64(n_bits)
-    return (h1 % np.uint64(n_shards)) * n_bits + (h1 + i * h2) % n_bits
+    base = (h1 % np.uint64(n_shards)) * n_bits
+    for i in range(k):
+        yield base + (h1 + np.uint64(i) * h2) % n_bits
 
 
-def _set_bits(bits: np.ndarray, pos: np.ndarray) -> None:
-    pos = pos.ravel()
-    np.bitwise_or.at(bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
+def _set_bits(bits: np.ndarray, positions) -> None:
+    for pos in positions:
+        np.bitwise_or.at(bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
 
 
 def _maybe_seen(urls: pd.Series, bits: np.ndarray, n_shards: int, n_bits: int,
                 k: int) -> np.ndarray:
     """Probe flags against a concatenated bitset; a null URL is never
-    maybe-seen (the anti-join keeps it, as the plain anti-join does)."""
+    maybe-seen."""
     ok = urls.notna().to_numpy()
     h1, h2 = _h12(urls[ok])
-    pos = _positions(h1, h2, n_shards, n_bits, k)
-    hit = np.zeros(len(urls), dtype=bool)
-    hit[ok] = ((bits[(pos >> 3).astype(np.int64)] & (1 << (pos & 7)).astype(np.uint8))
-               != 0).all(axis=0)
-    return hit
+    hit = np.ones(len(h1), dtype=bool)
+    for pos in _positions(h1, h2, n_shards, n_bits, k):
+        hit &= (bits[(pos >> 3).astype(np.int64)] & (1 << (pos & 7)).astype(np.uint8)) != 0
+    out = np.zeros(len(urls), dtype=bool)
+    out[ok] = hit
+    return out
 
 
 def shard_id_col(url: F.Column, n_shards: int = DEFAULT_N_SHARDS) -> F.Column:
@@ -178,17 +186,14 @@ def probe(candidates: DataFrame, shards: DataFrame, url_col: str = "url_canon",
         F.coalesce("maybe_seen", F.col(url_col).isNotNull()).alias("maybe_seen"))
 
 
-BROADCAST_SHARD_BYTES = 64 << 20  # ≤64 MiB of filter → ship as a probe broadcast
-
 # Registry of the sc.broadcast handles minted by probe_broadcast (here
 # and in operators/cuckoo.py). It holds STRONG references: the only other
 # reference lives inside the pickled UDF closure, so a weakref would be
-# dead on return and nothing could be destroyed. The crawl loop drains
-# the registry per window and destroys the previous window's handles
-# once wait_commit and the checkpoint materialization invariants
-# guarantee no live plan can re-evaluate them — instead of letting shard
-# bytes accrete until the loop's periodic GCs. One-shot callers (q16,
-# tests) never drain, so the registry keeps only the newest
+# dead on return and nothing could be destroyed. A caller that probes
+# repeatedly (perfbench, per job) drains the registry and destroys the
+# handles once no live plan can re-evaluate them, instead of letting
+# shard bytes accrete until the next periodic GC. One-shot callers
+# (tests) never drain, so the registry keeps only the newest
 # MAX_TRACKED_BROADCASTS handles; older ones fall back to the normal
 # ContextCleaner lifecycle instead of staying pinned for the session.
 MAX_TRACKED_BROADCASTS = 8
@@ -262,10 +267,9 @@ def probe_broadcast(candidates: DataFrame, shard_rows: list, n_shards: int,
 
 def merge_rows(prev_rows: list | None, delta_rows: list) -> list:
     """Driver-side OR-merge of collected shard rows (dicts). The crawl
-    loop keeps the small-arm (≤BROADCAST_SHARD_BYTES) filter state on the
-    driver: per window it collects only the DELTA shards (one small job)
-    and merges here in numpy — no lazy DataFrame chain whose re-evaluation
-    would grow with window count."""
+    loop keeps the filter state on the driver: per window it builds only
+    the DELTA shards and merges them here in numpy — no lazy DataFrame
+    chain whose re-evaluation would grow with window count."""
     by = {int(r["shard_id"]): dict(r) for r in (prev_rows or [])}
     for r in delta_rows:
         sid = int(r["shard_id"])
@@ -279,56 +283,18 @@ def merge_rows(prev_rows: list | None, delta_rows: list) -> list:
     return [by[k] for k in sorted(by)]
 
 
-# Prefix for the join key of probe negatives: no canonical URL starts
-# with NUL, so a salted key never matches a seen URL.
-_NEW_KEY_SALT = "\u0000"
-
-
-def _anti_join_probed(flagged: DataFrame, seen: DataFrame, url_col: str) -> DataFrame:
-    """One exact left_anti of a probed frame against seen. Probe positives
-    join on their URL; probe negatives on the salted URL, which matches
-    nothing yet hashes like a URL, so under a sort-merge join they spread
-    over the reducers (a null key would send them all to one). Returns
-    the probed frame's columns minus ``maybe_seen``."""
-    key = F.when(F.col("maybe_seen"), F.col(url_col)).otherwise(
-        F.concat(F.lit(_NEW_KEY_SALT), F.col(url_col)))
-    return (flagged.withColumn("_seen_key", key)
-            .join(seen.select(F.col(url_col).alias("_seen_key")), on="_seen_key",
-                  how="left_anti")
-            .drop("_seen_key", "maybe_seen"))
-
-
 def dedup_new_rows(candidates: DataFrame, seen: DataFrame, shard_rows: list,
                    url_col: str = "url_canon",
                    n_shards: int = DEFAULT_N_SHARDS) -> DataFrame:
-    """dedup_new for driver-held shard rows (the crawl's small-filter
-    path): no per-window first()/collect() jobs — the broadcast probe is
-    built directly from the rows, evaluated once per candidate, and its
-    flag routes the candidate inside one anti-join. No rows: plain
-    left_anti."""
-    if not shard_rows:
-        return candidates.join(seen, on=url_col, how="left_anti")
-    return _anti_join_probed(probe_broadcast(candidates, shard_rows, n_shards, url_col),
-                             seen, url_col)
+    """dedup_new for driver-held shard rows: the exact left_anti.
+    ``shard_rows`` and ``n_shards`` are accepted but unused (perfbench's
+    frontier job passes them); see the module docstring for why the
+    probe would route nothing here."""
+    return candidates.join(seen, on=url_col, how="left_anti")
 
 
 def dedup_new(candidates: DataFrame, seen: DataFrame, shards: DataFrame | None,
               url_col: str = "url_canon", n_shards: int = DEFAULT_N_SHARDS) -> DataFrame:
-    """D1: rows of candidates whose URL is not in seen.
-
-    With shards: each candidate is probed once and meets one exact
-    anti-join, routed by its probe flag (see ``_anti_join_probed``).
-    Small filters ship as a broadcast (no routing shuffle); big filters
-    use the cogrouped per-shard probe. Without shards: plain left_anti.
-    """
-    if shards is None:
-        return candidates.join(seen, on=url_col, how="left_anti")
-    shard_rows = None
-    first = shards.select("n_bits").first()
-    if first is not None and int(first["n_bits"]) // 8 * n_shards <= BROADCAST_SHARD_BYTES:
-        shard_rows = shards.collect()
-    if shard_rows:
-        flagged = probe_broadcast(candidates, shard_rows, n_shards, url_col)
-    else:
-        flagged = probe(candidates, shards, url_col, n_shards)
-    return _anti_join_probed(flagged, seen, url_col)
+    """D1: rows of candidates whose URL is not in seen — the exact
+    left_anti, with or without shards (see the module docstring)."""
+    return candidates.join(seen, on=url_col, how="left_anti")

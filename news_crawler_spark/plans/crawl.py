@@ -60,7 +60,7 @@ Batch plan:
   frontier_pending (1 row/active seed) → explode K pages → robots gate
     → politeness schedule → corpus join (S2)
     → mapInPandas parse (P1/P2) → canonicalize (U1-U5, native)
-    → link robots gate (C7) → exact anti-join vs seen, Bloom-routed (D1)
+    → link robots gate (C7) → exact anti-join vs seen (D1)
     → article-detail corpus join + parse where the profile needs it
       (S3/P3, semi-join reduced) → relevance (R1-R4) → time (T1-T8)
     → freshness (T6)  ⇒ pregate(row_ok)
@@ -69,7 +69,7 @@ Batch plan:
     → span assembly (P4) → stats job 2 → async snapshot commit (C6)
 
 Shuffles per window: corpus join on url_canon, dedup window on
-url_canon, seen anti-join on url_canon (Bloom-pruned), fuzzy
+url_canon, seen anti-join on url_canon, fuzzy
 applyInPandas on site. Listing/article scans prune on the corpus
 page_kind partition column.
 """
@@ -260,8 +260,8 @@ def run_crawl(
         seen_mem = store.read(spark, "seen")
         shard_rows = None
         if use_bloom and seen_mem is not None:
-            # A Bloom negative skips the exact anti-join, so the filter
-            # must cover every committed seen URL. The commit meta names
+            # The persisted filter must cover every committed seen URL
+            # (a Bloom filter has no false negatives). The commit meta names
             # the last batch the committed filter covers; a store whose
             # last window ran without the filter (or never had one) gets
             # it rebuilt from seen, once.
@@ -379,15 +379,6 @@ def run_crawl(
     res.prelude_s = time.time() - _t_prelude
     batch = max(store.last_batch_id, 0)  # fresh store: no init snapshot
     prev_unpersist: list[DataFrame] = []
-    # filter-probe broadcasts live on the prev_unpersist lifecycle: the
-    # window's sc.broadcast handles are drained into prev_probe_bcs when
-    # the window ends and destroyed at the NEXT window's drain point —
-    # after wait_commit (their commit plans are done) and after the next
-    # window's stats actions (which materialize the lazy checkpoints whose
-    # lineage was the last reference). Stale registry entries from earlier
-    # same-session queries are discarded (not destroyed) up front.
-    bloom.drain_probe_broadcasts()
-    prev_probe_bcs: list = []
     # driver-side head-list twin: small fused windows maintain the top-50
     # as driver rows (LocalTable commit — no per-window head Spark job);
     # exactly one of head_rows / head_mem is live at any time
@@ -605,22 +596,12 @@ def run_crawl(
             cand = cand.withColumn("order_key", order_key_e)
 
             # D1: cross-batch seen — seen rows can neither accept nor claim
-            # first-occurrence, so dropping them entirely is exact. The
-            # Bloom prefilter only routes; the anti-join decides. Each
-            # candidate is probed once and meets ONE anti-join, keyed on
-            # its URL if maybe-seen and on a never-matching salted URL if
-            # not (bloom._anti_join_probed).
-            # shard state is driver-held rows (bounded by the small-filter
-            # broadcast cap): no per-window collect/first jobs, no lazy
-            # merge chain whose evaluation grows with window count. Past
-            # BROADCAST_SHARD_BYTES the cogrouped bloom.probe path over
-            # store-materialized shards is the scale arm.
+            # first-occurrence, so dropping them entirely is exact. One
+            # exact anti-join decides; use_bloom only maintains the
+            # persisted Bloom filter, which this join does not probe (see
+            # operators/bloom.py for why a probe would route nothing).
             if seen_mem is not None:
-                if use_bloom:
-                    cand = bloom.dedup_new_rows(cand, seen_mem, shard_rows or [],
-                                                n_shards=N_BLOOM_SHARDS)
-                else:
-                    cand = cand.join(seen_mem, on="url_canon", how="left_anti")
+                cand = cand.join(seen_mem, on="url_canon", how="left_anti")
 
             # S3/P3: article detail where the profile needs it (single join;
             # parse carries http_status — C5 failure routing). The
@@ -1017,8 +998,6 @@ def run_crawl(
             store.wait_commit()
             for df in prev_unpersist:
                 df.unpersist()
-            bloom.destroy_broadcasts(prev_probe_bcs)
-            prev_probe_bcs = []
             _clock("commit_wait", t0)
             t0 = time.time()
             # size the write partitioning to the window: a K=1 window of a
@@ -1065,7 +1044,6 @@ def run_crawl(
             _clock("commit_submit", t0)
 
             prev_unpersist = [docs, pregate, items, dispatched, gated, frontier_mem]
-            prev_probe_bcs = bloom.drain_probe_broadcasts()
             if retry_mem is not None:
                 prev_unpersist.append(retry_mem)
             if new_head is not None:  # Spark-path head window
@@ -1103,7 +1081,6 @@ def run_crawl(
         store.wait_commit()
         for df in prev_unpersist + seen_chain + fuzzy_chain:
             df.unpersist()
-        bloom.destroy_broadcasts(prev_probe_bcs + bloom.drain_probe_broadcasts())
         if fuzzy_ckpt is not None:
             fuzzy_ckpt.unpersist()
         if frontier_mem is not None:

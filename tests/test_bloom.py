@@ -153,6 +153,9 @@ def test_broadcast_probe_with_empty_shards(spark):
     cand = spark.createDataFrame(_urls("seen", 3) + _urls("new", 50), "url_canon string")
     out = {r.url_canon for r in bloom.dedup_new(cand, seen, shards, n_shards=32).collect()}
     assert out == {u for (u,) in _urls("new", 50)}
+    flagged = bloom.probe_broadcast(cand, shards.collect(), n_shards=32)
+    assert all(r.maybe_seen for r in flagged.collect() if "/seen/" in r.url_canon)
+    bloom.destroy_broadcasts(bloom.drain_probe_broadcasts())
 
 
 def _reference_bits(urls, n_shards, n_bits, k):
@@ -201,9 +204,9 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_null_url_agrees_with_plain_anti_join(spark, monkeypatch):
+def test_null_url_agrees_with_plain_anti_join(spark):
     # a null candidate URL probes negative instead of failing the task,
-    # so use_bloom on and off keep the same rows
+    # and the dedup keeps it, as the plain anti-join does
     seen = spark.createDataFrame(_urls("seen", 20), "url_canon string")
     shards = bloom.build_shards(seen, n_shards=4, n_bits=1 << 12)
     cand = spark.createDataFrame(
@@ -211,23 +214,22 @@ def test_null_url_agrees_with_plain_anti_join(spark, monkeypatch):
         "url_canon string, x int")
     want = sorted(cand.join(seen, on="url_canon", how="left_anti").select("x").collect())
     assert [r.x for r in want] == [0, 2]
-    outs = [bloom.dedup_new_rows(cand, seen, shards.collect(), n_shards=4),
-            bloom.dedup_new(cand, seen, shards, n_shards=4)]  # broadcast arm
-    monkeypatch.setattr(bloom, "BROADCAST_SHARD_BYTES", 0)
-    outs.append(bloom.dedup_new(cand, seen, shards, n_shards=4))  # cogrouped arm
-    for got in outs:
+    shard_rows = shards.collect()
+    for got in (bloom.dedup_new_rows(cand, seen, shard_rows, n_shards=4),
+                bloom.dedup_new(cand, seen, shards, n_shards=4)):
         assert got.columns == cand.columns
         assert sorted(got.select("x").collect()) == want
-    # the cogrouped probe flags a null URL as not maybe-seen, too
-    flags = {r.x: r.maybe_seen for r in bloom.probe(cand, shards, n_shards=4).collect()}
-    assert flags == {0: False, 1: True, 2: flags[2]}
+    for flagged in (bloom.probe_broadcast(cand, shard_rows, n_shards=4),
+                    bloom.probe(cand, shards, n_shards=4)):
+        flags = {r.x: r.maybe_seen for r in flagged.collect()}
+        assert flags == {0: False, 1: True, 2: flags[2]}
     bloom.destroy_broadcasts(bloom.drain_probe_broadcasts())
 
 
-def test_probe_runs_once_and_new_rows_spread(spark):
-    # one probe evaluation feeding one anti-join, under both join
-    # strategies; under the sort-merge join the probe negatives must not
-    # pile into one reducer (a null join key would send them all there)
+def test_dedup_is_one_anti_join_and_new_rows_spread(spark):
+    # the dedup is one exact anti-join with no probe in its plan, under
+    # both join strategies; under the sort-merge join the new rows spread
+    # over the reducers (keyed on the URL, nothing piles into one)
     seen = spark.createDataFrame(_urls("seen", 300), "url_canon string")
     shard_rows = bloom.build_shards(seen, n_shards=8, n_bits=1 << 14).collect()
     cand = spark.createDataFrame(
@@ -244,7 +246,8 @@ def test_probe_runs_once_and_new_rows_spread(spark):
             out = bloom.dedup_new_rows(cand, F.broadcast(seen) if broadcast else seen,
                                        shard_rows, n_shards=8)
             plan = _plan(out)
-            assert plan.count("ArrowEvalPython") == 1, plan
+            assert "ArrowEvalPython" not in plan, plan
+            assert plan.count("LeftAnti") == 1, plan
             assert out.columns == cand.columns
             sizes = out.rdd.glom().map(len).collect()
             assert sum(sizes) == 3000
@@ -256,4 +259,3 @@ def test_probe_runs_once_and_new_rows_spread(spark):
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
-    bloom.destroy_broadcasts(bloom.drain_probe_broadcasts())

@@ -2,7 +2,6 @@
 scan the seen side pre-bucketed — Exchange only on the candidate side —
 and stay exactly equal to the plain anti-join."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from news_crawler_spark.sources.bucketed import (
@@ -86,59 +85,37 @@ def test_crawl_compaction_bounds_state_and_keeps_parity(spark, world, golden, tm
     spark.sql(f"DROP TABLE IF EXISTS {res.seen_table}")
 
 
-@pytest.fixture(scope="module")
-def folded_seen_table(spark, world, tmp_path_factory):
-    """A crawl folded into its bucketed seen table after every window."""
+def test_crawl_compaction_anti_join_is_one_bucketed_scan(spark, world, tmp_path):
+    """After a fold, the loop's seen side IS the bucketed table: replaying
+    the seen anti-join (bloom.dedup_new_rows, the same left_anti the loop
+    runs) against it shows ONE Exchange (candidates) and a pre-bucketed
+    seen scan — also with a Bloom filter's shard rows passed, which add
+    no probe to the plan."""
+    from news_crawler_spark.operators import bloom
     from news_crawler_spark.plans.crawl import run_crawl
     from news_crawler_spark.sources.store import SnapshotStore
 
-    store = SnapshotStore(str(tmp_path_factory.mktemp("pstore")))
+    store = SnapshotStore(str(tmp_path / "pstore"))
     res = run_crawl(spark, world, store, use_bloom=False, pages_per_batch=1,
                     compact_every=1)
     assert res.compactions >= 3
-    yield res.seen_table
-    spark.sql(f"DROP TABLE IF EXISTS {res.seen_table}")
-
-
-def _loop_anti_join_plan(spark, seen_table, shard_rows) -> str:
-    """Plan of the loop's exact anti-join call (bloom.dedup_new_rows)
-    against the folded table under the non-broadcast join strategy."""
-    from news_crawler_spark.operators import bloom
-
     cand = spark.range(2000).select(
         F.concat(F.lit("https://ex.com/p/"), F.col("id")).alias("url_canon"),
         (F.col("id") % 5).alias("x"),
     )
+    seen = spark.table(res.seen_table)
+    shard_rows = bloom.rows_from_urls([r.url_canon for r in seen.collect()])
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        return _plan(bloom.dedup_new_rows(cand, spark.table(seen_table), shard_rows))
+        plans = [_plan(bloom.dedup_new_rows(cand, seen, rows)) for rows in ([], shard_rows)]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_crawl_compaction_anti_join_is_one_bucketed_scan(spark, folded_seen_table):
-    """After a fold, the loop's seen side IS the bucketed table: replaying
-    the loop's exact anti-join call (bloom.dedup_new_rows with the
-    route-everything fallback) against it shows ONE Exchange (candidates)
-    and a pre-bucketed seen scan."""
-    plan = _loop_anti_join_plan(spark, folded_seen_table, [])
-    assert "Bucketed: true" in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_bloom_anti_join_is_one_bucketed_scan(spark, folded_seen_table):
-    """The Bloom arm (non-empty shard rows) keys its one anti-join on the
-    probe-routed URL; the bucketed seen side still scans pre-bucketed and
-    only the candidates shuffle."""
-    from news_crawler_spark.operators import bloom
-
-    urls = [r.url_canon for r in spark.table(folded_seen_table).collect()]
-    plan = _loop_anti_join_plan(spark, folded_seen_table, bloom.rows_from_urls(urls))
-    bloom.destroy_broadcasts(bloom.drain_probe_broadcasts())
-    assert plan.count("ArrowEvalPython") == 1
-    assert "Bucketed: true" in plan
-    assert plan.count("Exchange hashpartitioning") == 1
+    for plan in plans:
+        assert "Bucketed: true" in plan
+        assert plan.count("Exchange hashpartitioning") == 1
+        assert "ArrowEvalPython" not in plan
+    spark.sql(f"DROP TABLE IF EXISTS {res.seen_table}")
 
 
 def test_kill_resume_with_compaction(spark, world, tmp_path):
