@@ -599,8 +599,7 @@ def crawl_flagship(spark, sf):
 
     store = SnapshotStore(tempfile.mkdtemp(prefix="flagship_store_"))
     world = world_dfs(spark, 0.02)
-    run_crawl(spark, world, store, use_bloom=False, n_salts=2, pages_per_batch=8,
-              max_batches=2)
+    run_crawl(spark, world, store, pages_per_batch=8, max_batches=2)
     docs = store.read(spark, "documents")
     # crawl_order is the engine's (page, seed_index, dom_pos) key; rank it
     # so the oracle side (golden order list index) compares exactly

@@ -244,7 +244,7 @@ def main() -> None:
     world = read_world(spark, f"{tmp}/world")
     store = SnapshotStore(f"{tmp}/store")
     t0 = time.time()
-    res = run_crawl(spark, world, store, use_bloom=True, pages_per_batch=CRAWL_K)
+    res = run_crawl(spark, world, store, pages_per_batch=CRAWL_K)
     crawl_wall = time.time() - t0
     shutil.rmtree(tmp, ignore_errors=True)
     fetched = res.dispatched + res.accepted  # listing + article-detail fetches
@@ -270,8 +270,7 @@ def main() -> None:
     world = read_world(spark, f"{tmp}/world")
     store = SnapshotStore(f"{tmp}/store")
     t0 = time.time()
-    res_mw = run_crawl(spark, world, store, use_bloom=True,
-                       pages_per_batch=CRAWL_MULTI_K,
+    res_mw = run_crawl(spark, world, store, pages_per_batch=CRAWL_MULTI_K,
                        compact_every=CRAWL_COMPACT_EVERY,
                        cache_corpus=True)
     mw_wall = time.time() - t0

@@ -75,13 +75,6 @@ def load_keyword_config(cfg: dict) -> tuple[list[str], list[str], list[tuple[str
     return include, exclude, rows
 
 
-def load_keyword_config_file(path: str):
-    import json
-
-    with open(path, encoding="utf-8") as f:
-        return load_keyword_config(json.load(f))
-
-
 from contextlib import contextmanager as _contextmanager
 
 

@@ -36,14 +36,6 @@ def _words_expr(low: Column) -> Column:
     return F.array_distinct(uwords_expr(low))
 
 
-def substring_count_expr(low: Column, kws: Column) -> Column:
-    return F.size(F.filter(kws, lambda k: low.contains(k)))
-
-
-def wordset_count_expr(low: Column, kws: Column) -> Column:
-    return F.size(F.array_intersect(_words_expr(low), kws))
-
-
 def relevance_expr(
     text: Column,
     variant: Column,

@@ -91,9 +91,3 @@ def fingerprint_expr(text: Column) -> Column:
     r"""Document fingerprint: md5 of the whitespace-normalized lowercase
     text — the exact-dedup key that survives formatting noise."""
     return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
-
-
-def fingerprint64_expr(text: Column) -> Column:
-    """First 8 hex chars of the fingerprint as an unsigned 32-bit int in a
-    long — the compact join key for shard routing."""
-    return F.conv(F.substring(fingerprint_expr(text), 1, 8), 16, 10).cast("long")

@@ -62,11 +62,3 @@ def plant_twins(
             yield pd.DataFrame({id_col: out_ids, vec_col: out_vecs})
 
     return base.unionByName(base.mapInPandas(gen, schema))
-
-
-def planted_truth_ids(vectors: DataFrame, every: int = 10,
-                      id_offset: int = 100_000,
-                      id_col: str = "vec_id") -> list[tuple[int, int]]:
-    """The (orig_id, twin_id) truth pairs ``plant_twins`` creates."""
-    ids = [r[0] for r in vectors.select(id_col).collect()]
-    return [(i, id_offset + i) for i in sorted(ids) if i % every == 0]

@@ -2,12 +2,14 @@
 
 The reference holds every seen URL in an in-memory Python set
 (Nate_Crawler.py:44, seeded from disk at Naver_Crawler.py:58-64) — a
-non-starter at 10^10 URLs. Here the seen-set is (a) an exact ``seen``
-table, the only authority: ``dedup_new`` and ``dedup_new_rows`` are ONE
-exact ``left_anti`` against it; and (b) a sharded Bloom filter persisted
-as a ``bloom_shards`` table, whose probes (``probe_broadcast``, the
-cogrouped ``probe``) flag each candidate ``maybe_seen`` with no false
-negatives (a null URL is never maybe-seen).
+non-starter at 10^10 URLs. Here the seen-set is an exact ``seen`` table,
+the only authority: ``dedup_new`` and ``dedup_new_rows`` are ONE exact
+``left_anti`` against it. This module also builds a sharded Bloom filter
+over a seen set (``build_shards``, or the driver-side ``rows_from_urls``)
+in the ``bloom_shards`` row format, whose probes (``probe_broadcast``,
+the cogrouped ``probe``) flag each candidate ``maybe_seen`` with no
+false negatives (a null URL is never maybe-seen). The crawl keeps no
+filter: its seen state is the ``seen`` table alone.
 
 The dedup does not probe the filter. A probe negative saves work only
 if it skips the anti-join, and that takes a second plan arm over the
@@ -23,7 +25,6 @@ a filter too big to broadcast is probed by a **cogrouped applyInPandas** on
 shard_id, so candidate partitions meet only their own shard's bits — no
 broadcast of the full filter (at 10^10 URLs the filter is ~12 GB; one
 shard is a few MB). Shard count is the knob that bounds per-task memory.
-Updates are idempotent OR-merges of per-batch delta shards.
 
 Hashing is md5 double-hashing (h1 + i*h2 mod n_bits) — deterministic
 across Python/JVM boundaries and stable across runs (no PYTHONHASHSEED
@@ -126,11 +127,9 @@ def rows_from_urls(
     n_hashes: int = DEFAULT_N_HASHES,
     version: int = 0,
 ) -> list[dict]:
-    """Driver-side twin of ``build_shards(...).collect()`` for
-    window-bounded accept sets: identical md5 double-hash bit math and
-    shard routing (h1 % n_shards == shard_id_col), zero Spark jobs —
-    the crawl loop folds the filter update into its accept-stats collect
-    instead of running a separate applyInPandas job per window."""
+    """Driver-side twin of ``build_shards(...).collect()`` for a URL set
+    that is already on the driver: identical md5 double-hash bit math and
+    shard routing (h1 % n_shards == shard_id_col), zero Spark jobs."""
     h1, h2 = _h12(pd.Series(urls))
     n_bytes = n_bits // 8
     bits = np.zeros(n_shards * n_bytes, dtype=np.uint8)
@@ -138,23 +137,6 @@ def rows_from_urls(
     return [{"shard_id": s, "n_bits": n_bits, "n_hashes": n_hashes,
              "bits": bits[s * n_bytes:(s + 1) * n_bytes].tobytes(), "version": version}
             for s in map(int, np.unique(h1 % np.uint64(n_shards)))]
-
-
-def merge_shards(existing: DataFrame, delta: DataFrame) -> DataFrame:
-    """OR-merge shard tables (idempotent — re-merging a batch is a no-op)."""
-
-    def orit(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in pdf["bits"]:
-            a = np.frombuffer(b, dtype=np.uint8)
-            acc = a.copy() if acc is None else (acc | a)
-        r = pdf.iloc[[0]].copy()
-        r["bits"] = [acc.tobytes()]
-        r["version"] = int(pdf["version"].max())
-        return r
-
-    both = existing.unionByName(delta)
-    return both.groupBy("shard_id").applyInPandas(orit, schema=BLOOM_SCHEMA)
 
 
 def probe(candidates: DataFrame, shards: DataFrame, url_col: str = "url_canon",
@@ -263,24 +245,6 @@ def probe_broadcast(candidates: DataFrame, shard_rows: list, n_shards: int,
                                      n_shards, n_bits, k))
 
     return candidates.withColumn("maybe_seen", bloom_maybe_seen(F.col(url_col)))
-
-
-def merge_rows(prev_rows: list | None, delta_rows: list) -> list:
-    """Driver-side OR-merge of collected shard rows (dicts). The crawl
-    loop keeps the filter state on the driver: per window it builds only
-    the DELTA shards and merges them here in numpy — no lazy DataFrame
-    chain whose re-evaluation would grow with window count."""
-    by = {int(r["shard_id"]): dict(r) for r in (prev_rows or [])}
-    for r in delta_rows:
-        sid = int(r["shard_id"])
-        if sid not in by:
-            by[sid] = dict(r)
-            continue
-        a = np.frombuffer(by[sid]["bits"], dtype=np.uint8)
-        b = np.frombuffer(r["bits"], dtype=np.uint8)
-        by[sid] = dict(by[sid], bits=(a | b).tobytes(),
-                       version=max(int(by[sid]["version"]), int(r["version"])))
-    return [by[k] for k in sorted(by)]
 
 
 def dedup_new_rows(candidates: DataFrame, seen: DataFrame, shard_rows: list,

@@ -26,6 +26,17 @@ from pyspark.sql import functions as F
 ROBOTS_OUT = "host string, crawl_delay_s double, disallow_prefixes array<string>"
 
 
+def robots_from_corpus(corpus: DataFrame, default_delay_s: float = 1.0) -> DataFrame:
+    """The robots dimension PARSED from the fetched robots.txt pages of a
+    replayed corpus (``page_kind == "robots"``), keyed by host — C7 end
+    to end, for a crawl whose world carries no ground-truth robots
+    table."""
+    pages = corpus.filter(F.col("page_kind") == "robots").select(
+        F.parse_url(F.col("url_canon"), F.lit("HOST")).alias("host"), "content"
+    )
+    return parse_robots(pages, default_delay_s=default_delay_s)
+
+
 def parse_robots(pages: DataFrame, default_delay_s: float = 1.0) -> DataFrame:
     """pages(host, content:binary|string) → robots dimension.
 

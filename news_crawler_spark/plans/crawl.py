@@ -34,15 +34,13 @@ Driver-loop scale shape (round-2 rework of the round-1 scale-killers):
   same job, never recomputing the robots join) and the accept-row job,
   which for small windows also carries the head-list scalars (the top-50
   is then merged driver-side and committed via pyarrow — no per-window
-  head Spark job) and the Bloom-filter delta twin. Round 1 had five
-  collects; empty windows additionally elide their zero-row appends.
+  head Spark job). Round 1 had five collects; empty windows additionally
+  elide their zero-row appends.
 * The snapshot commit is ASYNC: window N+1's DAG builds and runs while
   window N's tables write; the manifest swap stays strictly ordered
   (one in-flight commit; the loop waits before submitting the next).
   Cross-window state is threaded in memory — seen set and fuzzy titles
-  as persisted DataFrames, Bloom shards as driver-held rows
-  (bounded by the small-filter broadcast cap; deltas collected per
-  window, merged in numpy) — so no window blocks on reading back what
+  as persisted DataFrames — so no window blocks on reading back what
   the previous one wrote. A crash loses only uncommitted windows;
   resume replays them deterministically from the last manifest.
 * Host-count dimensions (robots, profiles) broadcast only below
@@ -95,7 +93,6 @@ from ..functions.relevance import (
 )
 from ..functions.timeparse import batch_ts_lit, freshness_filter_expr, parse_time_expr
 from ..functions.urls import canonicalize_expr
-from ..operators import bloom
 from ..operators.fuzzy import fuzzy_gate
 from ..operators.parse import parse_article, parse_listing
 from ..operators.scheduler import (
@@ -134,7 +131,7 @@ DRIVER_STATS_MAX_ROWS = 500_000    # window items up to which stats2 is one fuse
 DRIVER_HEAD_MAX_ROWS = 50_000      # window items up to which the head list stays driver-side
 RELEVANCE_UDF_THRESHOLD = 64       # keyword counts above this take the Arrow-UDF relevance path
 RETRY_BACKOFF_WINDOWS = 1          # windows a failed fetch waits before it is retried
-N_BLOOM_SHARDS = bloom.DEFAULT_N_SHARDS
+SCHEDULER_SALTS = 4                # host-salt fan-out of the politeness schedule
 
 
 @dataclass
@@ -177,17 +174,15 @@ def run_crawl(
     world: dict[str, DataFrame],
     store: SnapshotStore,
     batch_ts: str = BATCH_TS,
-    use_bloom: bool = True,
-    n_salts: int = 4,
     pages_per_batch: int = 1,
     max_batches: int = 10_000,
     fail_after_batch: int | None = None,
     include_keywords: list[str] | None = None,
     exclude_keywords: list[str] | None = None,
     max_retries: int = 0,
-    robots_from_corpus: bool = False,
     compact_every: int | None = None,
     cache_corpus: bool = False,
+    use_bloom: bool = False,  # ignored: the seen dedup is one exact anti-join
 ) -> CrawlResult:
     """Run the crawl to frontier exhaustion (or ``max_batches`` windows),
     committing one snapshot per window; resumes from the store's last
@@ -218,18 +213,7 @@ def run_crawl(
         from pyspark import StorageLevel
 
         articles = articles.persist(StorageLevel.MEMORY_AND_DISK)
-    if robots_from_corpus:
-        # C7 end-to-end: the robots dimension is PARSED from fetched
-        # robots.txt bytes in the replayed corpus (operators/robots.py
-        # native state machine), not handed in as a table
-        from ..operators.robots import parse_robots
-
-        rpages = corpus.filter(F.col("page_kind") == "robots").select(
-            F.parse_url(F.col("url_canon"), F.lit("HOST")).alias("host"), "content"
-        )
-        robots = parse_robots(rpages, default_delay_s=1.0).persist()
-    else:
-        robots = world["robots"]
+    robots = world["robots"]
     if include_keywords is None:
         include_keywords = config.INCLUDE_KEYWORDS
     if exclude_keywords is None:
@@ -258,20 +242,6 @@ def run_crawl(
         if retry_mem is not None:
             retry_mem = retry_mem.filter(F.col("seed_index") >= 0).persist()
         seen_mem = store.read(spark, "seen")
-        shard_rows = None
-        if use_bloom and seen_mem is not None:
-            # The persisted filter must cover every committed seen URL
-            # (a Bloom filter has no false negatives). The commit meta names
-            # the last batch the committed filter covers; a store whose
-            # last window ran without the filter (or never had one) gets
-            # it rebuilt from seen, once.
-            man = store.manifest()
-            if man.get("meta", {}).get("bloom_through") == man["batch_id"]:
-                shards_df = store.read(spark, "bloom_shards")
-            else:
-                shards_df = bloom.build_shards(seen_mem, n_shards=N_BLOOM_SHARDS,
-                                               version=man["batch_id"])
-            shard_rows = [r.asDict() for r in shards_df.collect()]
     else:
         # no init snapshot: a crash before the first window's commit
         # re-initializes from the world's seed list — same state
@@ -285,7 +255,6 @@ def run_crawl(
         fuzzy_mem = None
         head_mem = None
         seen_mem = None
-        shard_rows = None
         retry_mem = None
 
     # Per-site semantic scalars the driver-side stop logic needs come from
@@ -296,17 +265,15 @@ def run_crawl(
     profiles = profiles_df(spark, world_sites)
     n_dim_rows = len(world_sites)
     if n_dim_rows <= DIM_BROADCAST_MAX:
-        # Localize the broadcast-sized robots dim: the distributed parse
-        # (or scan) runs exactly ONCE here; per-window broadcasts of a
-        # driver-local relation then rebuild the hash relation without
-        # re-running the corpus-derived robots chain as a cluster job
-        # (two such jobs per window otherwise: robots_gate + the
-        # link-host disallow join). Past the broadcast cap the
-        # distributed shuffle-join path below is unchanged.
-        _r_rows = robots.collect()
-        _r_schema = robots.schema
-        robots.unpersist()
-        robots = spark.createDataFrame(_r_rows, _r_schema)
+        # Localize the broadcast-sized robots dim: its plan (a scan, or
+        # a distributed parse such as robots.robots_from_corpus) runs
+        # exactly ONCE here; per-window broadcasts of a driver-local
+        # relation then rebuild the hash relation without re-running a
+        # corpus-derived robots chain as a cluster job (two such jobs
+        # per window otherwise: robots_gate + the link-host disallow
+        # join). Past the broadcast cap the distributed shuffle-join
+        # path below is unchanged.
+        robots = spark.createDataFrame(robots.collect(), robots.schema)
 
     def _dim(df: DataFrame) -> DataFrame:
         """Host/site-count dimensions broadcast only while they are small;
@@ -534,7 +501,7 @@ def run_crawl(
             gated = robots_gate(
                 due, robots, broadcast_robots=n_dim_rows <= DIM_BROADCAST_MAX
             ).persist()
-            dispatched = schedule_gated(gated, bts, window_s, n_salts=n_salts).persist()
+            dispatched = schedule_gated(gated, bts, window_s, n_salts=SCHEDULER_SALTS).persist()
             retries_next = None
             if max_retries > 0:
                 fail_rows = (
@@ -597,9 +564,8 @@ def run_crawl(
 
             # D1: cross-batch seen — seen rows can neither accept nor claim
             # first-occurrence, so dropping them entirely is exact. One
-            # exact anti-join decides; use_bloom only maintains the
-            # persisted Bloom filter, which this join does not probe (see
-            # operators/bloom.py for why a probe would route nothing).
+            # exact anti-join decides (operators/bloom.py explains why a
+            # Bloom probe in front of it would route nothing).
             if seen_mem is not None:
                 cand = cand.join(seen_mem, on="url_canon", how="left_anti")
 
@@ -695,10 +661,7 @@ def run_crawl(
             # bound below the window's last due page — the common window
             # (no seed stopped) keeps every row by construction, so the
             # join + filter would be a per-window no-op job.
-            def _last_due(s) -> int:
-                return min(p1, s["max_pages"]) if s["max_pages"] else p1
-
-            if any(limits[s["seed_index"]] < _last_due(s) for s in active):
+            if any(limits[s["seed_index"]] < _last_due_page(s, p1) for s in active):
                 limit_df = spark.createDataFrame(
                     pd.DataFrame(
                         [(s["seed_index"], limits[s["seed_index"]]) for s in active],
@@ -765,10 +728,9 @@ def run_crawl(
             # ---- stats job 2: accept counts. Window-bounded windows
             # (items <= DRIVER_STATS_MAX_ROWS) collect the accepted
             # (seed, page, url) rows instead of pre-aggregated counts:
-            # ONE job then yields accept counts AND the Bloom filter
-            # delta (driver-side numpy twin of the shard builder) — the
-            # per-window applyInPandas+collect filter job disappears.
-            # Larger windows keep the aggregate+job path.
+            # ONE job then yields accept counts AND the seen delta as
+            # driver rows (a LocalTable commit, no write job). Larger
+            # windows keep the aggregate+job path.
             t0 = time.time()
             n_items_total = sum(item_counts.values())
             fuse_stats = n_items_total <= DRIVER_STATS_MAX_ROWS
@@ -813,7 +775,7 @@ def run_crawl(
             # ---- pagination state for next window ------------------------
             for s in active:
                 si = s["seed_index"]
-                last_due = min(p1, s["max_pages"]) if s["max_pages"] else p1
+                last_due = _last_due_page(s, p1)
                 if limits[si] < last_due:
                     s["active"] = False  # stop rule fired inside the window
                 elif item_counts.get((si, last_due), 0) == 0:
@@ -835,25 +797,7 @@ def run_crawl(
             fuzzy_chain.append(fz_delta)
             new_fuzzy = fuzzy_mem.unionByName(fz_delta) if fuzzy_mem is not None else fz_delta
 
-            # filter update: collect only the DELTA (one small job on the
-            # cached seen_delta), merge/insert driver-side in numpy
             overwrite: dict[str, DataFrame] = {}
-            if use_bloom:
-                if accept_urls is not None:
-                    delta_rows = bloom.rows_from_urls(
-                        accept_urls, n_shards=N_BLOOM_SHARDS, version=batch)
-                else:
-                    delta_rows = [r.asDict() for r in bloom.build_shards(
-                        seen_delta, n_shards=N_BLOOM_SHARDS, version=batch).collect()]
-                shard_rows = bloom.merge_rows(shard_rows, delta_rows)
-                # driver rows → pyarrow commit write: no per-window 1-task
-                # Spark job per state table (the K=1 window floor was job
-                # count, not bytes — see LocalTable)
-                overwrite["bloom_shards"] = LocalTable(
-                    [(int(r["shard_id"]), int(r["n_bits"]), int(r["n_hashes"]),
-                      bytes(r["bits"]), int(r["version"])) for r in shard_rows],
-                    bloom.BLOOM_SCHEMA)
-
             frontier_rows = [
                 (s["seed_index"], s["site"], s["url"], p1 + 1, s["max_pages"], "pending")
                 for s in seed_state if s["active"]
@@ -1008,8 +952,8 @@ def run_crawl(
             append_tables = {
                 "documents": docs.drop("seed_index", "page", "norm_title",
                                        "fuzzy_dedup").coalesce(w_docs),
-                # fused windows already collected the accepted URLs for
-                # the stats/filter twins — the seen delta is driver rows
+                # fused windows already collected the accepted URLs with
+                # the accept stats — the seen delta is driver rows
                 "seen": (LocalTable([(u,) for u in accept_urls],
                                     "url_canon string")
                          if accept_urls is not None
@@ -1038,8 +982,6 @@ def run_crawl(
             meta = {"pages": [p0, p1],
                     "active_seeds": sum(1 for s in seed_state if s["active"]),
                     "retries_pending": n_retry}
-            if use_bloom:
-                meta["bloom_through"] = batch  # bloom_shards covers seen up to here
             store.commit_async(batch, overwrite=overwrite, append=append_tables, meta=meta)
             _clock("commit_submit", t0)
 
@@ -1089,14 +1031,18 @@ def run_crawl(
             retry_mem.unpersist()
         if head_mem is not None:
             head_mem.unpersist()
-        if robots_from_corpus:
-            robots.unpersist()
         if cache_corpus:
             articles.unpersist()
     return res
 
 
 # ---------------------------------------------------------------- helpers
+
+def _last_due_page(seed: dict, p1: int) -> int:
+    """A seed's last due page in a window ending at ``p1``: its page
+    cap bounds the window (``max_pages`` 0/None = uncapped)."""
+    return min(p1, seed["max_pages"]) if seed["max_pages"] else p1
+
 
 def _stop_replay(
     active: list[dict],
@@ -1127,7 +1073,7 @@ def _stop_replay(
     # empty-page limits apply to every seed
     for s in active:
         si = s["seed_index"]
-        last = min(p1, s["max_pages"]) if s["max_pages"] else p1
+        last = _last_due_page(s, p1)
         lim = last
         for p in range(p0, last + 1):
             if item_counts.get((si, p), 0) == 0:

@@ -113,7 +113,6 @@ def crawl_foreach_batch(
     world: dict[str, DataFrame],
     store,
     pages_per_batch: int = 4,
-    use_bloom: bool = False,
 ):
     """foreachBatch bridge: one streaming trigger = one crawl window.
 
@@ -126,7 +125,6 @@ def crawl_foreach_batch(
     def on_batch(_tick_df: DataFrame, _batch_id: int) -> None:
         run_crawl(
             spark, world, store,
-            use_bloom=use_bloom,
             pages_per_batch=pages_per_batch,
             max_batches=max(store.last_batch_id, 0) + 1,  # one window per tick
         )

@@ -14,7 +14,7 @@ from news_crawler_spark.sources.store import SnapshotStore
 @pytest.fixture(scope="module")
 def documents(spark, world, tmp_path_factory):
     store = SnapshotStore(str(tmp_path_factory.mktemp("archive_store")))
-    run_crawl(spark, world, store, use_bloom=False, pages_per_batch=8)
+    run_crawl(spark, world, store, pages_per_batch=8)
     return store.read(spark, "documents")
 
 
@@ -102,7 +102,7 @@ def test_crawl_maintains_incremental_head_list(spark, world, tmp_path):
     from news_crawler_spark.sources.store import SnapshotStore
 
     store = SnapshotStore(str(tmp_path / "head_store"))
-    run_crawl(spark, world, store, use_bloom=False, pages_per_batch=2)
+    run_crawl(spark, world, store, pages_per_batch=2)
     docs = store.read(spark, "documents")
     expect = {(r.url, str(r.ts)) for r in head_list(docs, k=50).collect()}
     got_rows = store.read(spark, "head_list").collect()

@@ -1,5 +1,5 @@
 """Bloom shard prefilter: never a false negative (exactness — SURVEY
-§7.3 'Bloom ∧ exactness'), OR-merge idempotence, and routing stats."""
+§7.3 'Bloom ∧ exactness') and routing stats."""
 
 from pyspark.sql import functions as F
 
@@ -30,20 +30,6 @@ def test_dedup_new_exact(spark):
     cand = spark.createDataFrame(_urls("seen", 300) + _urls("new", 300), "url_canon string")
     out = {r.url_canon for r in bloom.dedup_new(cand, seen, shards, n_shards=8).collect()}
     assert out == {u for (u,) in _urls("new", 300)}
-
-
-def test_merge_shards_idempotent(spark):
-    a = bloom.build_shards(
-        spark.createDataFrame(_urls("a", 100), "url_canon string"), n_shards=4, n_bits=1 << 12
-    )
-    b = bloom.build_shards(
-        spark.createDataFrame(_urls("b", 100), "url_canon string"), n_shards=4, n_bits=1 << 12
-    )
-    ab = bloom.merge_shards(a, b)
-    ab2 = bloom.merge_shards(ab, b)  # re-merging the same delta: no-op
-    m1 = {r.shard_id: r.bits for r in ab.collect()}
-    m2 = {r.shard_id: r.bits for r in ab2.collect()}
-    assert m1 == m2
 
 
 def test_shard_routing_matches_python_hash(spark):

@@ -64,8 +64,7 @@ def test_crawl_compaction_bounds_state_and_keeps_parity(spark, world, golden, tm
     from news_crawler_spark.sources.store import SnapshotStore
 
     store = SnapshotStore(str(tmp_path / "cstore"))
-    res = run_crawl(spark, world, store, use_bloom=True, pages_per_batch=1,
-                    compact_every=2)
+    res = run_crawl(spark, world, store, pages_per_batch=1, compact_every=2)
     # folds fire at the top of the window AFTER the interval elapses
     assert res.compactions == (res.batches - 1) // 2
     assert res.compactions >= 1
@@ -96,8 +95,7 @@ def test_crawl_compaction_anti_join_is_one_bucketed_scan(spark, world, tmp_path)
     from news_crawler_spark.sources.store import SnapshotStore
 
     store = SnapshotStore(str(tmp_path / "pstore"))
-    res = run_crawl(spark, world, store, use_bloom=False, pages_per_batch=1,
-                    compact_every=1)
+    res = run_crawl(spark, world, store, pages_per_batch=1, compact_every=1)
     assert res.compactions >= 3
     cand = spark.range(2000).select(
         F.concat(F.lit("https://ex.com/p/"), F.col("id")).alias("url_canon"),
@@ -128,14 +126,12 @@ def test_kill_resume_with_compaction(spark, world, tmp_path):
     from news_crawler_spark.sources.store import SnapshotStore
 
     s_full = SnapshotStore(str(tmp_path / "cfull"))
-    run_crawl(spark, world, s_full, use_bloom=False, pages_per_batch=2,
-              compact_every=1)
+    run_crawl(spark, world, s_full, pages_per_batch=2, compact_every=1)
     s_kill = SnapshotStore(str(tmp_path / "ckill"))
     with _pt.raises(InjectedFailure):
-        run_crawl(spark, world, s_kill, use_bloom=False, pages_per_batch=2,
+        run_crawl(spark, world, s_kill, pages_per_batch=2,
                   compact_every=1, fail_after_batch=1)
-    res = run_crawl(spark, world, s_kill, use_bloom=False, pages_per_batch=2,
-                    compact_every=1)
+    res = run_crawl(spark, world, s_kill, pages_per_batch=2, compact_every=1)
 
     def _state(store):
         docs = {(r.doc_id, tuple((s.kind, s.text, s.media_ref, s.offset)

@@ -171,7 +171,7 @@ def test_crawl_parity_at_reference_keyword_scale(spark, tmp_path):
         golden = run_reference_model(build_world(0.02))
         world = world_dfs(spark, 0.02)
         store = SnapshotStore(str(tmp_path / "kw_store"))
-        run_crawl(spark, world, store, use_bloom=False, pages_per_batch=8)
+        run_crawl(spark, world, store, pages_per_batch=8)
         rows = store.read(spark, "documents").collect()
     eng = {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows}
     assert eng == {k: [tuple(s) for s in v] for k, v in golden.docs.items()}

@@ -13,7 +13,7 @@ def crawl_run(spark, world, tmp_path_factory, request):
     """Parity must hold at both cadences: K=1 (the reference's
     page-at-a-time politeness cadence) and K=8 (windowed scale mode)."""
     store = SnapshotStore(str(tmp_path_factory.mktemp("store")))
-    res = run_crawl(spark, world, store, use_bloom=True, pages_per_batch=request.param)
+    res = run_crawl(spark, world, store, pages_per_batch=request.param)
     return store, res
 
 
@@ -42,6 +42,7 @@ def test_seen_set_parity(spark, golden, crawl_run):
     store, _ = crawl_run
     seen = {r.url_canon for r in store.read(spark, "seen").collect()}
     assert seen == golden.seen
+    assert not store.exists("bloom_shards")  # the seen table is the only seen state
 
 
 def test_timestamp_parity(spark, golden, crawl_run):
@@ -91,7 +92,7 @@ def test_parity_with_virtual_sites(spark, tmp_path):
     golden2 = run_reference_model(build_world(0.05, site_mult=2))
     world2 = world_dfs(spark, 0.05, site_mult=2)
     store = SnapshotStore(str(tmp_path / "mult_store"))
-    run_crawl(spark, world2, store, use_bloom=False, pages_per_batch=16)
+    run_crawl(spark, world2, store, pages_per_batch=16)
     rows = store.read(spark, "documents").collect()
     eng = {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows}
     assert eng == {k: [tuple(s) for s in v] for k, v in golden2.docs.items()}
@@ -104,12 +105,11 @@ def test_parity_with_virtual_sites(spark, tmp_path):
 def test_unfused_stats_and_head_paths_parity(spark, world, golden, tmp_path, monkeypatch,
                                              stats_cap, head_cap):
     """The Spark stats2/head-list path that windows past the driver caps
-    take (aggregate stats job, Spark Bloom-delta builder, Spark head
+    take (aggregate stats job, Spark seen/fuzzy delta writes, Spark head
     merge) keeps parity and maintains the same head list as the batch
     top-50. Caps of -1 force every window onto that path."""
     from pyspark.sql import functions as F
 
-    from news_crawler_spark.operators import bloom
     from news_crawler_spark.operators.archive import head_list
     from news_crawler_spark.plans import crawl
 
@@ -117,18 +117,14 @@ def test_unfused_stats_and_head_paths_parity(spark, world, golden, tmp_path, mon
         monkeypatch.setattr(crawl, "DRIVER_STATS_MAX_ROWS", stats_cap)
     monkeypatch.setattr(crawl, "DRIVER_HEAD_MAX_ROWS", head_cap)
     store = SnapshotStore(str(tmp_path / "unfused"))
-    res = run_crawl(spark, world, store, use_bloom=True, pages_per_batch=2)
-    assert res.batches >= 2  # the second window probes the first one's Spark-built delta
+    res = run_crawl(spark, world, store, pages_per_batch=2)
+    assert res.batches >= 2  # the second window dedups against the first one's Spark delta
 
     eng, rows = _engine_docs(spark, store)
     assert len(rows) == len(eng)
     assert eng == {k: [tuple(s) for s in v] for k, v in golden.docs.items()}
     assert [r.url_canon for r in sorted(rows, key=lambda r: r.crawl_order)] == golden.order
     assert {r.url_canon for r in store.read(spark, "seen").collect()} == golden.seen
-    # the OR of the Spark-built per-window deltas is the filter of the whole seen set
-    want = {r["shard_id"]: r["bits"] for r in bloom.rows_from_urls(sorted(golden.seen))}
-    got = {r.shard_id: bytes(r.bits) for r in store.read(spark, "bloom_shards").collect()}
-    assert got == want
 
     cols = ["title", "time", "img", "summary", "url", "site", "ts"]
     docs = store.read(spark, "documents")

@@ -5,7 +5,6 @@ per run (daum_scrape.yml:47-56)."""
 
 import pytest
 
-from news_crawler_spark.operators import bloom
 from news_crawler_spark.plans.crawl import InjectedFailure, run_crawl
 from news_crawler_spark.sources.store import SnapshotStore, merge_insert_new
 
@@ -21,15 +20,14 @@ def _final_state(spark, store):
 
 def test_kill_resume_equals_uninterrupted(spark, world, tmp_path):
     s_full = SnapshotStore(str(tmp_path / "full"))
-    run_crawl(spark, world, s_full, use_bloom=False, pages_per_batch=2)
+    run_crawl(spark, world, s_full, pages_per_batch=2)
 
     s_killed = SnapshotStore(str(tmp_path / "killed"))
     with pytest.raises(InjectedFailure):
-        run_crawl(spark, world, s_killed, use_bloom=False, pages_per_batch=2,
-                  fail_after_batch=1)
+        run_crawl(spark, world, s_killed, pages_per_batch=2, fail_after_batch=1)
     assert s_killed.last_batch_id == 1
     # resume — picks up from the last committed snapshot
-    run_crawl(spark, world, s_killed, use_bloom=False, pages_per_batch=2)
+    run_crawl(spark, world, s_killed, pages_per_batch=2)
 
     assert _final_state(spark, s_full) == _final_state(spark, s_killed)
 
@@ -85,7 +83,7 @@ def test_time_travel_append_tables(spark, world, tmp_path):
     """read_at_batch: documents as of window k equals what window k had
     committed (Iceberg snapshot-read semantics on the append deltas)."""
     store = SnapshotStore(str(tmp_path / "tt"))
-    run_crawl(spark, world, store, use_bloom=False, pages_per_batch=2)
+    run_crawl(spark, world, store, pages_per_batch=2)
     assert store.last_batch_id >= 2
     full = store.read(spark, "documents").count()
     at1 = store.read_at_batch(spark, "documents", 1)
@@ -107,15 +105,19 @@ def test_time_travel_append_tables(spark, world, tmp_path):
                          ids=["off-on", "on-off-on"])
 def test_resume_rebuilds_bloom_filter_when_setting_changes(spark, world, golden, tmp_path,
                                                           blooms):
-    """Resuming with the Bloom prefilter on a store whose committed filter
-    does not cover every committed seen URL (an earlier window ran without
-    it) still accepts each document once: a Bloom negative skips the
-    exact anti-join, so the resume must rebuild the filter from seen."""
+    """K=1 resume ticks (the tick_crawl shape) with ``use_bloom`` switched
+    between calls: one window per call, then a resume that runs to the
+    end. ``use_bloom`` is an ignored keyword, so every call rebuilds its
+    cross-window state from the committed seen set alone, writes no Bloom
+    filter, and still accepts each document once, in reference order,
+    with the reference seen set."""
     store = SnapshotStore(str(tmp_path / "switch"))
     for use_bloom in blooms[:-1]:  # one window each
         run_crawl(spark, world, store, use_bloom=use_bloom, pages_per_batch=1,
                   max_batches=max(store.last_batch_id, 0) + 1)
+    assert store.last_batch_id == len(blooms) - 1
     run_crawl(spark, world, store, use_bloom=blooms[-1], pages_per_batch=1)
+    assert not store.exists("bloom_shards")  # the seen table is the only seen state
 
     rows = store.read(spark, "documents").collect()
     assert len(rows) == len({r.doc_id for r in rows})
@@ -124,6 +126,3 @@ def test_resume_rebuilds_bloom_filter_when_setting_changes(spark, world, golden,
     assert [r.url_canon for r in sorted(rows, key=lambda r: r.crawl_order)] == golden.order
     seen = [r.url_canon for r in store.read(spark, "seen").collect()]
     assert sorted(seen) == sorted(golden.seen)
-    want = {r["shard_id"]: r["bits"] for r in bloom.rows_from_urls(sorted(golden.seen))}
-    got = {r.shard_id: bytes(r.bits) for r in store.read(spark, "bloom_shards").collect()}
-    assert got == want  # the committed filter covers the whole seen set

@@ -30,8 +30,7 @@ def target_url():
 def test_failed_fetch_requeued_and_recovered(spark, world, tmp_path, target_url):
     store = SnapshotStore(str(tmp_path / "retry_store"))
     broken = _broken(world, target_url)
-    run_crawl(spark, broken, store, use_bloom=False, pages_per_batch=2,
-              max_batches=1, max_retries=2)
+    run_crawl(spark, broken, store, pages_per_batch=2, max_batches=1, max_retries=2)
 
     # the failure is logged AND requeued with attempt+1 and a backoff window
     log = store.read(spark, "frontier_log").filter(F.col("url_canon") == target_url)
@@ -42,8 +41,7 @@ def test_failed_fetch_requeued_and_recovered(spark, world, tmp_path, target_url)
     assert pend[0].attempt == 1 and pend[0].retry_after_batch == 2
 
     # site comes back: resume against the healthy corpus
-    run_crawl(spark, world, store, use_bloom=False, pages_per_batch=2,
-              max_retries=2)
+    run_crawl(spark, world, store, pages_per_batch=2, max_retries=2)
     log2 = store.read(spark, "frontier_log").filter(F.col("url_canon") == target_url)
     stats = {(r.status, r.attempt) for r in log2.collect()}
     assert ("failed", 0) in stats and ("fetched", 1) in stats
@@ -59,9 +57,9 @@ def test_failed_fetch_requeued_and_recovered(spark, world, tmp_path, target_url)
     # without retries the page stays lost: the resumed run never
     # re-dispatches it (the frontier only moves forward)
     store0 = SnapshotStore(str(tmp_path / "noretry_store"))
-    run_crawl(spark, _broken(world, target_url), store0, use_bloom=False,
+    run_crawl(spark, _broken(world, target_url), store0,
               pages_per_batch=2, max_batches=1, max_retries=0)
-    run_crawl(spark, world, store0, use_bloom=False, pages_per_batch=2, max_retries=0)
+    run_crawl(spark, world, store0, pages_per_batch=2, max_retries=0)
     assert store0.read(spark, "frontier_log").filter(
         (F.col("url_canon") == target_url) & (F.col("status") == "fetched")
     ).count() == 0
@@ -75,8 +73,7 @@ def test_retry_gives_up_after_max_attempts(spark, world, tmp_path, target_url):
     bounded state, no infinite requeue."""
     store = SnapshotStore(str(tmp_path / "dead_store"))
     broken = _broken(world, target_url)
-    run_crawl(spark, broken, store, use_bloom=False, pages_per_batch=2,
-              max_retries=2)
+    run_crawl(spark, broken, store, pages_per_batch=2, max_retries=2)
     log = store.read(spark, "frontier_log").filter(F.col("url_canon") == target_url)
     attempts = sorted(r.attempt for r in log.collect())
     assert attempts == [0, 1, 2]  # original + 2 retries
@@ -87,7 +84,7 @@ def test_retry_off_keeps_parity(spark, world, golden, tmp_path):
     """max_retries=0 (default) is byte-identical to the parity baseline —
     the feature adds no behavior unless asked for."""
     store = SnapshotStore(str(tmp_path / "off_store"))
-    run_crawl(spark, world, store, use_bloom=False, pages_per_batch=4, max_retries=0)
+    run_crawl(spark, world, store, pages_per_batch=4, max_retries=0)
     rows = store.read(spark, "documents").collect()
     eng = {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows}
     assert eng == {k: [tuple(s) for s in v] for k, v in golden.docs.items()}

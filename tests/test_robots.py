@@ -60,15 +60,10 @@ def test_parsed_robots_feed_scheduler(spark):
 def test_robots_parsed_from_corpus_matches_world_table(spark, world):
     """The robots dimension parsed from the corpus's robots.txt bytes
     equals the world's ground-truth robots table."""
-    from pyspark.sql import functions as F
+    from news_crawler_spark.operators.robots import robots_from_corpus
 
-    from news_crawler_spark.operators.robots import parse_robots
-
-    rpages = world["corpus"].filter(F.col("page_kind") == "robots").select(
-        F.parse_url(F.col("url_canon"), F.lit("HOST")).alias("host"), "content"
-    )
     parsed = {r.host: (r.crawl_delay_s, list(r.disallow_prefixes))
-              for r in parse_robots(rpages).collect()}
+              for r in robots_from_corpus(world["corpus"]).collect()}
     truth = {r.host: (r.crawl_delay_s, list(r.disallow_prefixes))
              for r in world["robots"].collect()}
     assert parsed == truth
@@ -78,12 +73,13 @@ def test_crawl_with_robots_from_corpus_keeps_parity(spark, world, golden, tmp_pa
     """End-to-end C7: fetch robots.txt from the replayed corpus, parse it
     natively, and run the whole crawl off the parsed dimension — same
     parity result as the ground-truth table."""
+    from news_crawler_spark.operators.robots import robots_from_corpus
     from news_crawler_spark.plans.crawl import run_crawl
     from news_crawler_spark.sources.store import SnapshotStore
 
     store = SnapshotStore(str(tmp_path / "rfc_store"))
-    run_crawl(spark, world, store, use_bloom=False, pages_per_batch=8,
-              robots_from_corpus=True)
+    run_crawl(spark, dict(world, robots=robots_from_corpus(world["corpus"])), store,
+              pages_per_batch=8)
     rows = store.read(spark, "documents").collect()
     eng = {r.doc_id: [(s.kind, s.text, s.media_ref, s.offset) for s in r.spans] for r in rows}
     assert eng == {k: [tuple(s) for s in v] for k, v in golden.docs.items()}

@@ -105,8 +105,7 @@ def test_crawl_foreach_batch_resumable(spark, world, tmp_path):
 
     # reference: an uninterrupted driver-loop run of the same windows
     ref_store = SnapshotStore(str(tmp_path / "ref_store"))
-    run_crawl(spark, world, ref_store, use_bloom=False, pages_per_batch=4,
-              max_batches=store.last_batch_id)
+    run_crawl(spark, world, ref_store, pages_per_batch=4, max_batches=store.last_batch_id)
     a = {r.doc_id for r in store.read(spark, "documents").collect()}
     b = {r.doc_id for r in ref_store.read(spark, "documents").collect()}
     assert a == b

@@ -58,8 +58,7 @@ spark = get_spark(cores={cores}, shuffle_partitions={cores},
 world = read_world(spark, {world_dir!r})
 store = SnapshotStore({store_dir!r})
 t0 = time.time()
-res = run_crawl(spark, world, store, use_bloom=True, pages_per_batch={K},
-                cache_corpus=True)
+res = run_crawl(spark, world, store, pages_per_batch={K}, cache_corpus=True)
 wall = time.time() - t0
 fetched = res.dispatched + res.accepted
 stages = {{}}

@@ -24,7 +24,6 @@ def main() -> None:
     ap.add_argument("--store", required=True, help="snapshot store root")
     ap.add_argument("--pages-per-batch", type=int, default=16)
     ap.add_argument("--max-batches", type=int, default=10_000)
-    ap.add_argument("--no-bloom", action="store_true")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -46,7 +45,6 @@ def main() -> None:
     t0 = time.time()
     res = run_crawl(
         spark, world, store,
-        use_bloom=not args.no_bloom,
         pages_per_batch=args.pages_per_batch,
         max_batches=args.max_batches,
     )
